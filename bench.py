@@ -466,7 +466,6 @@ def _composed_throughput(spark, sf_dir: str) -> float:
             out_dir=os.path.join(root, "out"),
             qi_cols=["lang"],
             band_col="band",
-            num_partitions=8,
         )
         hi = d.agg(F.max("doc_id")).first()[0] or 0
         cuts = (hi // 3, 2 * hi // 3)

@@ -363,7 +363,6 @@ def q_retry_pipeline_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         DeadLetterPolicy(max_redeliveries=3),
         state_dir=_replay_scratch("retry_audit"),
         nack_delay_ms=0,
-        num_partitions=8,
         clock=lambda: 0.0,
     )
     half = frame.agg(F.max(mid)).first()[0] // 2
@@ -449,7 +448,6 @@ def q_streaming_curation_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipe = StreamingCurationPipeline(
         state_dir=_replay_scratch("curation_state"),
         out_dir=_replay_scratch("curation_out"),
-        num_partitions=8,
     )
     hi = d.agg(F.max("doc_id")).first()[0] or 0
     cuts = (hi // 3, 2 * hi // 3)
@@ -559,7 +557,6 @@ def q_streaming_privacy_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         band_col="band",
         id_col="ck",
         text_col="contact",
-        num_partitions=8,
     )
     hi = c.agg(F.max("ck")).first()[0] or 0
     cuts = (hi // 3, 2 * hi // 3)
@@ -691,7 +688,6 @@ def q_streaming_composed_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         out_dir=_replay_scratch("composed_out"),
         qi_cols=["lang"],
         band_col="band",
-        num_partitions=8,
     )
     hi = d.agg(F.max("doc_id")).first()[0] or 0
     cuts = (hi // 3, 2 * hi // 3)

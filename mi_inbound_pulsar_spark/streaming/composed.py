@@ -56,6 +56,10 @@ class ComposedGatesPipeline:
     The batch frame must carry ``id_col``, ``source_col``, ``qi_cols``,
     ``band_col`` and ``text_col``; released records are fed to curation
     as ``(doc_id, source, text)`` with the redacted text.
+
+    ``num_partitions`` is accepted for existing callers and ignored:
+    every family write of both gates is a keyed exchange with no pinned
+    partition count, which AQE sizes to the epoch's bytes.
     """
 
     def __init__(
@@ -72,7 +76,7 @@ class ComposedGatesPipeline:
         min_tokens: int = 20,
         train_cut: str = "cd",
         pack_size: int = 512,
-        num_partitions: int = 8,
+        num_partitions: int | None = None,
     ):
         self.state_dir = state_dir
         self.id_col = id_col
@@ -87,7 +91,6 @@ class ComposedGatesPipeline:
             text_col=text_col,
             k=k,
             l_div=l_div,
-            num_partitions=num_partitions,
             autocommit=False,
         )
         self.curation = StreamingCurationPipeline(
@@ -96,7 +99,6 @@ class ComposedGatesPipeline:
             min_tokens=min_tokens,
             train_cut=train_cut,
             pack_size=pack_size,
-            num_partitions=num_partitions,
             autocommit=False,
         )
 

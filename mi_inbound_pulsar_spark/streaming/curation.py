@@ -59,6 +59,10 @@ class StreamingCurationPipeline:
     ``neardup_threshold=None`` disables the shingle probe (exact
     cross-batch dedup only) — that configuration is row-identical to
     ``q_training_data_pipeline`` on ordered input.
+
+    ``num_partitions`` is accepted for existing callers and ignored:
+    every family write is a keyed exchange with no pinned partition
+    count, which AQE sizes to the epoch's bytes.
     """
 
     def __init__(
@@ -69,7 +73,7 @@ class StreamingCurationPipeline:
         train_cut: str = TRAIN_CUT,
         pack_size: int = PACK_SIZE,
         neardup_threshold: float | None = None,
-        num_partitions: int = 8,
+        num_partitions: int | None = None,
         autocommit: bool = True,
     ):
         self.state_dir = state_dir
@@ -78,7 +82,6 @@ class StreamingCurationPipeline:
         self.train_cut = train_cut
         self.pack_size = pack_size
         self.neardup_threshold = neardup_threshold
-        self.num_partitions = num_partitions
         # autocommit=False → a composing caller owns the epoch's single
         # commit marker (streaming/composed.py)
         self.autocommit = autocommit
@@ -97,11 +100,9 @@ class StreamingCurationPipeline:
         shutil.rmtree(path, ignore_errors=True)  # replayed epoch: rewrite
         # keyed exchange WITHOUT a pinned partition count (round 13):
         # AQE coalesces the write to the family's actual bytes — one
-        # file per tiny replay epoch instead of num_partitions near-
-        # empty tasks+files, while a corpus-scale epoch still fans out
-        # to shuffle.partitions (scale-adaptive, guide §6/§2).
-        # num_partitions stays as the explicit override for layouts
-        # that must shard deterministically.
+        # file per tiny replay epoch instead of a fixed fan-out of
+        # near-empty tasks+files, while a corpus-scale epoch still fans
+        # out to shuffle.partitions (scale-adaptive, guide §6/§2).
         df.repartition(F.col(key)).write.mode("overwrite").parquet(path)
 
     # concurrent epoch-family writes; one shared implementation so the

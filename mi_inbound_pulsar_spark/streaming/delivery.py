@@ -36,6 +36,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from mi_inbound_pulsar_spark.config import DeadLetterPolicy
 
@@ -290,8 +291,10 @@ class KeyedRetryPipeline:
     contract: PulsarMessageConsumer.java:203-227 (ack after process),
     :295-304 (DLQ after max redeliveries).
 
-    State layout: ``state_dir/v<epoch>/`` parquet, repartitioned by
-    ``hash(message_id)`` into ``num_partitions`` files; a commit marker
+    State layout: ``state_dir/v<epoch>/`` parquet, written through a
+    keyed ``hash(message_id)`` exchange with no pinned partition count,
+    so AQE coalesces a tiny epoch to one file while a large one still
+    fans out to ``spark.sql.shuffle.partitions``; a commit marker
     under ``state_dir/_commits/<epoch>`` lands only after the write
     succeeds. An invocation at epoch N reads the newest *committed*
     version with epoch < N, so a replayed micro-batch (crash between
@@ -300,18 +303,25 @@ class KeyedRetryPipeline:
     wins upsert, idempotent under K3 replay.
 
     ``process(deliver_df, epoch) -> DataFrame[(message_id, ok bool)]``
-    decides per-record outcomes. Rows delivered but MISSING from the
-    outcome frame are the K6 case: with ``ack_timeout_ms`` set they are
-    parked and redelivered once the timeout elapses; without one they
-    are treated as nacked immediately (conservative at-least-once).
-    Rows whose bumped count reaches ``policy.max_redeliveries`` are
-    routed to ``dlq_dir/v<epoch>/`` (same idempotent versioning) and
-    dropped from state, keeping state bounded.
+    decides per-record outcomes. Only ``ok = TRUE`` acks; ``ok = FALSE``
+    and ``ok = NULL`` are both explicit nacks. Rows delivered but
+    MISSING from the outcome frame are the K6 case: with
+    ``ack_timeout_ms`` set they are parked and redelivered once the
+    timeout elapses; without one they are treated as nacked immediately
+    (conservative at-least-once). Rows whose bumped count reaches
+    ``policy.max_redeliveries`` are routed to ``dlq_dir/v<epoch>/``
+    (same idempotent versioning) and dropped from state, keeping state
+    bounded.
 
-    Scale: state shuffles only parked rows (failures — a sliver of the
-    stream) on a 1-column key; the due-row scan is a filter over a
-    hash-partitioned parquet read; the union into the next batch adds
-    no extra shuffle beyond the per-batch plan.
+    Scale: each epoch judges its delivered rows in ONE pass — a single
+    left join of the delivered rows with the outcome, whose matched
+    side carries a ``_responded`` tag so unacked rows stay
+    distinguishable from nacked ones — so ``process`` and the batch
+    scan run once per epoch. The parked rows (failures — a sliver of
+    the stream) are persisted for the epoch and feed both the DLQ and
+    the state write. The state read passes the schema of the version
+    this instance last committed, so only a freshly constructed
+    instance (e.g. after a restart) infers it from the files.
 
     Epoch-ordering contract: Structured Streaming's ``foreachBatch``
     delivers epochs sequentially per query — epoch N is retried until
@@ -337,7 +347,6 @@ class KeyedRetryPipeline:
         ack_timeout_ms: int | None = None,
         backoff_multiplier: float = 1.0,
         max_delay_ms: int | None = None,
-        num_partitions: int = 8,
         clock: Callable[[], float] = time.time,
     ):
         self.process = process
@@ -348,8 +357,9 @@ class KeyedRetryPipeline:
         self.ack_timeout_ms = ack_timeout_ms
         self.backoff_multiplier = backoff_multiplier
         self.max_delay_ms = max_delay_ms
-        self.num_partitions = num_partitions
         self.clock = clock
+        # (epoch, schema) of the newest state version this instance wrote
+        self._committed_schema: tuple[int, StructType] | None = None
         os.makedirs(os.path.join(state_dir, "_commits"), exist_ok=True)
 
     # -- state-table plumbing ------------------------------------------------
@@ -361,12 +371,16 @@ class KeyedRetryPipeline:
         prior = [e for e in self._committed_epochs() if e < epoch_id]
         if not prior:
             return None
-        return spark.read.parquet(os.path.join(self.state_dir, f"v{prior[-1]}"))
+        reader = spark.read
+        if self._committed_schema and self._committed_schema[0] == prior[-1]:
+            reader = reader.schema(self._committed_schema[1])  # no inference job
+        return reader.parquet(os.path.join(self.state_dir, f"v{prior[-1]}"))
 
     def _commit(self, df: DataFrame, root: str, epoch_id: int) -> None:
         path = os.path.join(root, f"v{epoch_id}")
         shutil.rmtree(path, ignore_errors=True)  # replayed epoch: rewrite
-        df.repartition(self.num_partitions, "message_id").write.mode("overwrite").parquet(path)
+        # AQE-coalescible keyed exchange, as in curation._write
+        df.repartition("message_id").write.mode("overwrite").parquet(path)
 
     def _finalize(self, epoch_id: int) -> None:
         marker = os.path.join(self.state_dir, "_commits", str(epoch_id))
@@ -414,34 +428,44 @@ class KeyedRetryPipeline:
             deliver = fresh
 
         outcome = self.process(deliver, epoch_id).select(
-            "message_id", F.col("ok").cast("boolean").alias("ok")
+            "message_id",
+            F.col("ok").cast("boolean").alias("ok"),
+            F.lit(True).alias("_responded"),
         )
-        # nacked = explicit failures; missing-from-outcome = K6 unacked
-        responded = deliver.join(outcome, "message_id", "inner")
-        nacked = responded.filter(~F.col("ok")).drop("ok").withColumn(
-            "_retry_pending_ack", F.lit(False)
-        )
-        unacked = deliver.join(outcome, "message_id", "left_anti").withColumn(
-            "_retry_pending_ack", F.lit(self.ack_timeout_ms is not None)
+        # one judged pass: only ok = TRUE acks; FALSE/NULL are nacks, and a
+        # row with no outcome (_responded NULL) is the K6 unacked case
+        pending_ack = (
+            F.col("_responded").isNull()
+            if self.ack_timeout_ms is not None
+            else F.lit(False)
         )
         parked = (
-            nacked.unionByName(unacked)
+            deliver.join(outcome, "message_id", "left")
+            .filter(~F.coalesce(F.col("ok"), F.lit(False)))
+            .withColumn("_retry_pending_ack", pending_ack)
+            .drop("ok", "_responded")
             .withColumn("_retry_count", F.col("redelivery_count") + 1)
             .withColumn("_retry_last", F.lit(now))
+            .persist()
         )
-        # K7: exhausted → DLQ (dropped from state: bounded)
-        dead = parked.filter(F.col("_retry_count") >= F.lit(self.policy.max_redeliveries))
-        live = parked.filter(F.col("_retry_count") < F.lit(self.policy.max_redeliveries))
-        if held is not None:
-            live = live.unionByName(held)
+        try:
+            # K7: exhausted → DLQ (dropped from state: bounded)
+            exhausted = F.col("_retry_count") >= F.lit(self.policy.max_redeliveries)
+            dead = parked.filter(exhausted)
+            live = parked.filter(~exhausted)
+            if held is not None:
+                live = live.unionByName(held)
 
-        self._commit(
-            dead.withColumn("redelivery_count", F.col("_retry_count")).drop(*self._META),
-            self.dlq_dir,
-            epoch_id,
-        )
-        self._commit(live, self.state_dir, epoch_id)
-        self._finalize(epoch_id)
+            self._commit(
+                dead.withColumn("redelivery_count", F.col("_retry_count")).drop(*self._META),
+                self.dlq_dir,
+                epoch_id,
+            )
+            self._commit(live, self.state_dir, epoch_id)
+            self._finalize(epoch_id)
+            self._committed_schema = (epoch_id, live.schema)
+        finally:
+            parked.unpersist()
 
     # -- inspection helpers (tests / ops) -----------------------------------
     def state_df(self, spark: SparkSession) -> DataFrame | None:

@@ -57,6 +57,10 @@ class StreamingPrivacyPipeline:
     sensitive attribute (already banded), ``text_col`` the free-text
     column to scrub (pass ``None`` to skip redaction), ``id_col`` a
     unique record id.
+
+    ``num_partitions`` is accepted for existing callers and ignored:
+    every family write is a keyed exchange with no pinned partition
+    count, which AQE sizes to the epoch's bytes.
     """
 
     def __init__(
@@ -69,7 +73,7 @@ class StreamingPrivacyPipeline:
         text_col: str | None = None,
         k: int = K_ANON,
         l_div: int = L_DIVERSE,
-        num_partitions: int = 8,
+        num_partitions: int | None = None,
         autocommit: bool = True,
     ):
         self.state_dir = state_dir
@@ -80,7 +84,6 @@ class StreamingPrivacyPipeline:
         self.text_col = text_col
         self.k = k
         self.l_div = l_div
-        self.num_partitions = num_partitions
         # autocommit=False → a composing caller owns the epoch's single
         # commit marker (streaming/composed.py); state reads still key
         # off this state_dir's _commits, which the composer shares

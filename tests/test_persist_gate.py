@@ -34,6 +34,7 @@ PKG = Path(__file__).resolve().parent.parent / "mi_inbound_pulsar_spark"
 # finalizer that unpersists — the sanctioned way for an intermediate
 # scanned multiple times inside ONE returned plan).
 LIFECYCLE_OWNERS = {
+    "streaming/delivery.py",
     "streaming/privacy.py",
     "streaming/curation.py",
     "plans/iterate.py",

@@ -134,7 +134,6 @@ def test_keyed_retry_flaky_poison_dlq_across_restart(spark, sf_dir, tmp_path):
             DeadLetterPolicy(max_redeliveries=3),
             state_dir=state,
             nack_delay_ms=0,
-            num_partitions=4,
         )
 
     def run_query(pipe):
@@ -220,7 +219,6 @@ def test_keyed_retry_ack_timeout_k6(spark, tmp_path):
         state_dir=str(tmp_path / "state"),
         nack_delay_ms=0,
         ack_timeout_ms=60_000,
-        num_partitions=2,
         clock=lambda: fake[0],
     )
     batch = spark.createDataFrame(
@@ -258,7 +256,6 @@ def test_keyed_retry_exponential_backoff(spark, tmp_path):
         nack_delay_ms=60_000,
         backoff_multiplier=2.0,
         max_delay_ms=180_000,
-        num_partitions=2,
         clock=lambda: fake[0],
     )
     batch = spark.createDataFrame([("a", 0)], "message_id string, redelivery_count int")
@@ -313,7 +310,6 @@ def test_keyed_retry_crash_between_dlq_and_state_replays_cleanly(spark, tmp_path
             state_dir=str(state_dir),
             dlq_dir=str(dlq_dir),
             nack_delay_ms=0,
-            num_partitions=2,
         )
 
     # control: no crash
@@ -366,3 +362,84 @@ def test_keyed_retry_crash_between_dlq_and_state_replays_cleanly(spark, tmp_path
     # DLQ'd rows left the state table (bounded-state contract)
     live = {r["message_id"] for r in pipe.state_df(spark).collect()}
     assert not live & {"5", "10"}
+
+
+def test_keyed_retry_null_outcome_is_a_nack(spark, tmp_path):
+    """Only ok = TRUE acks: an outcome of ok = NULL parks the row as an
+    explicit nack (not lost, not treated as the K6 unacked case)."""
+    from mi_inbound_pulsar_spark.streaming.delivery import KeyedRetryPipeline
+
+    outcomes = spark.createDataFrame(
+        [("1", True), ("2", None), ("3", False)], "message_id string, ok boolean"
+    )
+
+    def process(deliver, epoch_id):
+        return outcomes  # "4" gets no answer at all
+
+    pipe = KeyedRetryPipeline(
+        process,
+        DeadLetterPolicy(max_redeliveries=5),
+        state_dir=str(tmp_path / "state"),
+        nack_delay_ms=0,
+        ack_timeout_ms=60_000,
+        clock=lambda: 0.0,
+    )
+    batch = spark.createDataFrame(
+        [(str(i), f"payload{i}") for i in range(1, 5)], "message_id string, body string"
+    )
+    pipe(batch, 0)
+    parked = {
+        r["message_id"]: (r["_retry_count"], r["_retry_pending_ack"])
+        for r in pipe.state_df(spark).collect()
+    }
+    assert parked == {"2": (1, False), "3": (1, False), "4": (1, True)}
+
+
+def test_keyed_retry_epoch_job_budget(spark, sf_dir, tmp_path):
+    """One judged pass per epoch: a data epoch with prior state launches
+    at most 7 Spark jobs and an empty drain epoch at most 6, while the
+    DLQ and the drained state keep their closed form."""
+    import glob
+
+    from mi_inbound_pulsar_spark.streaming.delivery import KeyedRetryPipeline
+
+    frame = simulated_message_frame(spark, sf_dir)
+    topic = str(tmp_path / "topic")
+    publish_frame(frame, topic, files=2)
+
+    def process(deliver, epoch_id):
+        mid = F.col("message_id").cast("long")
+        ok = ~(((mid % 100 == 7) & (F.col("redelivery_count") < 2)) | (mid % 100 == 13))
+        return deliver.select("message_id", ok.alias("ok"))
+
+    pipe = KeyedRetryPipeline(
+        process,
+        DeadLetterPolicy(max_redeliveries=3),
+        state_dir=str(tmp_path / "state"),
+        nack_delay_ms=0,
+        clock=lambda: 0.0,
+    )
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    read = spark.read.schema(frame.schema)
+    batches = [read.parquet(f) for f in sorted(glob.glob(f"{topic}/*.parquet"))]
+    assert len(batches) == 2
+    batches += [read.parquet(topic).filter(F.lit(False))] * 3
+
+    jobs = []
+    for epoch_id, batch in enumerate(batches):
+        before = dag.numTotalJobs()
+        pipe(batch, epoch_id)
+        jobs.append(dag.numTotalJobs() - before)
+    assert jobs[1] <= 7, jobs
+    assert all(n <= 6 for n in jobs[2:]), jobs
+
+    poison = {
+        (r["message_id"], 3)
+        for r in frame.filter(F.col("message_id").cast("long") % 100 == 13).collect()
+    }
+    dead = {
+        (r["message_id"], r["redelivery_count"])
+        for r in pipe.dead_letters_df(spark).collect()
+    }
+    assert poison and dead == poison
+    assert pipe.state_df(spark).count() == 0

@@ -47,7 +47,6 @@ def run_once(spark, d, n_rows: int, hi: int, n_epochs: int) -> float:
             out_dir=os.path.join(root, "out"),
             qi_cols=["lang"],
             band_col="band",
-            num_partitions=8,
         )
         bounds = [hi * k // n_epochs for k in range(n_epochs + 1)]
         t0 = time.time()
