@@ -16,7 +16,8 @@ epoch M — curation's cross-batch dedup index and per-source pack
 offsets therefore advance in RELEASE order, which is what makes the
 composition's closed form expressible (and hash-checkable) at all.
 
-Single-protocol state layout, one root:
+Single-protocol state layout: one :class:`.epochstore.EpochStore` over
+one root, shared by both gates:
 
 - ``state_dir/stats|pending/v<epoch>`` — the privacy gate's families
   (:mod:`.privacy`).
@@ -26,12 +27,12 @@ Single-protocol state layout, one root:
   families (:mod:`.curation`).
 - ``out_dir/v<epoch>`` — the packed training stream.
 - ``state_dir/_commits/<epoch>`` — ONE marker for the whole composed
-  epoch, landed only after every family's write succeeded. Both
-  sub-pipelines are constructed with ``autocommit=False`` over the
-  SAME state root, so they discover committed epochs from the shared
-  marker set: a crash anywhere mid-epoch (privacy written, curation
-  not) leaves no marker, every reader stays blind to the torn epoch,
-  and the replay rewrites all seven ``v<epoch>`` dirs.
+  epoch, landed only after every family's write succeeded. The
+  composer runs each gate's ``_run`` (its writes, no marker) and
+  commits once, so both gates discover committed epochs from the
+  shared marker set: a crash anywhere mid-epoch (privacy written,
+  curation not) leaves no marker, every reader stays blind to the torn
+  epoch, and the replay rewrites every ``v<epoch>`` dir.
 
 Monotone release (privacy) + order-insensitive index/dedup semantics
 (curation on release-ordered batches) ⇒ the batch-twin identity holds
@@ -42,6 +43,7 @@ hash-checked by ``q_streaming_composed_replay``'s closed-form oracle.
 from __future__ import annotations
 
 import os
+import traceback
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -91,7 +93,6 @@ class ComposedGatesPipeline:
             text_col=text_col,
             k=k,
             l_div=l_div,
-            autocommit=False,
         )
         self.curation = StreamingCurationPipeline(
             state_dir=state_dir,
@@ -99,11 +100,8 @@ class ComposedGatesPipeline:
             min_tokens=min_tokens,
             train_cut=train_cut,
             pack_size=pack_size,
-            autocommit=False,
         )
-
-    def _committed_epochs(self) -> list[int]:
-        return self.privacy._committed_epochs()  # shared root
+        self.store = self.curation.store = self.privacy.store
 
     def read_output(self, spark: SparkSession) -> DataFrame | None:
         """Committed packed training stream (curation's output)."""
@@ -127,7 +125,7 @@ class ComposedGatesPipeline:
         try:
             # 3+4. curation over the released records only (writes
             # hashes/shingles/offsets/out v<epoch>, no marker)
-            self.curation(
+            self.curation._run(
                 released.select(
                     released[self.id_col].alias("doc_id"),
                     released[self.source_col].alias("source"),
@@ -135,10 +133,20 @@ class ComposedGatesPipeline:
                 ),
                 epoch_id,
             )
-        finally:
+        except BaseException as exc:
             # privacy's writes quiesce before any failure propagates:
             # a torn epoch leaves a settled (arbitrary) subset of
-            # v<epoch> dirs and NO marker — the seam matrix's contract
-            wait_privacy()
+            # v<epoch> dirs and NO marker — the seam matrix's contract.
+            # The curation error is the one raised; a privacy write
+            # failure rides along as a note with its traceback
+            try:
+                wait_privacy()
+            except Exception as privacy_exc:  # noqa: BLE001 — attached, not lost
+                exc.add_note(
+                    "privacy-gate writes also failed:\n"
+                    + "".join(traceback.format_exception(privacy_exc))
+                )
+            raise
+        wait_privacy()
         # 5. the composed epoch's single commit marker
-        self.privacy._finalize(epoch_id)
+        self.store.commit(epoch_id)

@@ -9,8 +9,7 @@ hands each message batch to a pipeline — PulsarMessageConsumer.java
 :535-545) and the LLM-data-pipeline layer: the pipeline a curation
 user would inject IS this object.
 
-State design (the ``KeyedRetryPipeline`` idempotency recipe,
-delivery.py:283):
+State design (families of one :class:`.epochstore.EpochStore`):
 
 - ``state_dir/hashes/v<epoch>/`` — per-epoch DELTA of accepted
   documents' text hashes (exact-dedup index). Append-only: reading
@@ -24,7 +23,8 @@ delivery.py:283):
   source) of the per-source cumulative token totals, so sequence
   packing continues across batch boundaries exactly where the
   previous batch stopped.
-- A commit marker under ``state_dir/_commits/<epoch>`` lands only
+- ``out_dir/v<epoch>/`` — the epoch's packed training rows.
+- The store's commit marker ``state_dir/_commits/<epoch>`` lands only
   after every write of that epoch succeeds. A replayed micro-batch
   (crash between state write and offset commit — the K3 case)
   deterministically REWRITES the same ``v<epoch>`` directories
@@ -40,12 +40,11 @@ single-shot batch twin (asserted in tests/test_streaming_curation.py)
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mi_inbound_pulsar_spark.streaming.epochio import write_all
+from mi_inbound_pulsar_spark.streaming.epochstore import EpochStore
 
 MIN_TOKENS = 20
 TRAIN_CUT = "cd"
@@ -58,7 +57,9 @@ class StreamingCurationPipeline:
 
     ``neardup_threshold=None`` disables the shingle probe (exact
     cross-batch dedup only) — that configuration is row-identical to
-    ``q_training_data_pipeline`` on ordered input.
+    ``q_training_data_pipeline`` on ordered input. Enabling the probe
+    on state whose committed epochs lack a shingle index raises
+    ``ValueError`` at construction: backfill ``shingles/v<epoch>`` first.
 
     ``num_partitions`` is accepted for existing callers and ignored:
     every family write is a keyed exchange with no pinned partition
@@ -74,7 +75,6 @@ class StreamingCurationPipeline:
         pack_size: int = PACK_SIZE,
         neardup_threshold: float | None = None,
         num_partitions: int | None = None,
-        autocommit: bool = True,
     ):
         self.state_dir = state_dir
         self.out_dir = out_dir
@@ -82,43 +82,25 @@ class StreamingCurationPipeline:
         self.train_cut = train_cut
         self.pack_size = pack_size
         self.neardup_threshold = neardup_threshold
-        # autocommit=False → a composing caller owns the epoch's single
-        # commit marker (streaming/composed.py)
-        self.autocommit = autocommit
-        os.makedirs(os.path.join(state_dir, "_commits"), exist_ok=True)
-
-    # -- state plumbing (the KeyedRetryPipeline recipe) ---------------------
-    def _committed_epochs(self) -> list[int]:
-        d = os.path.join(self.state_dir, "_commits")
-        return sorted(int(f) for f in os.listdir(d)) if os.path.isdir(d) else []
-
-    def _delta_paths(self, kind: str, epochs: list[int]) -> list[str]:
-        return [os.path.join(self.state_dir, kind, f"v{e}") for e in epochs]
-
-    def _write(self, df: DataFrame, root: str, epoch_id: int, key: str) -> None:
-        path = os.path.join(root, f"v{epoch_id}")
-        shutil.rmtree(path, ignore_errors=True)  # replayed epoch: rewrite
-        # keyed exchange WITHOUT a pinned partition count (round 13):
-        # AQE coalesces the write to the family's actual bytes — one
-        # file per tiny replay epoch instead of a fixed fan-out of
-        # near-empty tasks+files, while a corpus-scale epoch still fans
-        # out to shuffle.partitions (scale-adaptive, guide §6/§2).
-        df.repartition(F.col(key)).write.mode("overwrite").parquet(path)
-
-    # concurrent epoch-family writes; one shared implementation so the
-    # crash-seam contract cannot diverge between pipelines (epochio.py)
-    _write_all = write_all
-
-    def _finalize(self, epoch_id: int) -> None:
-        with open(os.path.join(self.state_dir, "_commits", str(epoch_id)), "w"):
-            pass
+        self.store = EpochStore(state_dir)
+        if neardup_threshold is not None:
+            shingles = self._family("shingles")
+            missing = sorted(
+                set(self.store.committed()) - set(self.store.versions(shingles))
+            )
+            if missing:
+                raise ValueError(
+                    f"neardup_threshold is set but committed epochs {missing} "
+                    f"have no shingle index under {shingles}; backfill "
+                    "shingles/v<epoch> for them before enabling the probe"
+                )
 
     def read_output(self, spark: SparkSession) -> DataFrame | None:
         """Union of the committed per-epoch packed outputs."""
-        paths = [
-            os.path.join(self.out_dir, f"v{e}") for e in self._committed_epochs()
-        ]
-        return spark.read.parquet(*paths) if paths else None
+        return self.store.union(spark, self.out_dir)
+
+    def _family(self, name: str) -> str:
+        return os.path.join(self.state_dir, name)
 
     @staticmethod
     def _hashed_shingles(docs: DataFrame) -> DataFrame:
@@ -132,11 +114,17 @@ class StreamingCurationPipeline:
 
     # -- the foreachBatch body ----------------------------------------------
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
+        self._run(batch_df, epoch_id)
+        self.store.commit(epoch_id)
+
+    def _run(self, batch_df: DataFrame, epoch_id: int) -> None:
+        """The epoch's compute and family writes, without the commit
+        marker — a composing caller (streaming/composed.py) lands one
+        marker for several gates."""
         from mi_inbound_pulsar_spark.operators.dedup import jaccard_matches_against
         from mi_inbound_pulsar_spark.operators.sampling import hash_bucket
 
         spark = batch_df.sparkSession
-        committed = [e for e in self._committed_epochs() if e < epoch_id]
 
         # 1. quality gate — narrow filter, pushed to the batch scan
         quality = batch_df.select(
@@ -162,16 +150,20 @@ class StreamingCurationPipeline:
             )
         )
         # 2b. cross-batch exact dedup: anti-join the accepted-hash index
-        if committed:
-            base_hashes = spark.read.parquet(
-                *self._delta_paths("hashes", committed)
-            ).select("text_md5")
-            deduped = deduped.join(base_hashes, "text_md5", "left_anti")
+        base_hashes = self.store.union(spark, self._family("hashes"), below=epoch_id)
+        if base_hashes is not None:
+            deduped = deduped.join(
+                base_hashes.select("text_md5"), "text_md5", "left_anti"
+            )
         # 2c. cross-batch near-dup: probe the base shingle index with
         # the delta only (q_dedup_incremental's asymmetric join — the
         # index is never self-joined)
-        if self.neardup_threshold is not None and committed:
-            sh_base = spark.read.parquet(*self._delta_paths("shingles", committed))
+        sh_base = (
+            self.store.union(spark, self._family("shingles"), below=epoch_id)
+            if self.neardup_threshold is not None
+            else None
+        )
+        if sh_base is not None:
             sh_delta = self._hashed_shingles(deduped.select("doc_id", "text"))
             near = jaccard_matches_against(
                 sh_delta, sh_base, self.neardup_threshold
@@ -186,11 +178,8 @@ class StreamingCurationPipeline:
         train = survivors.filter(
             hash_bucket(F.col("doc_id"), "split-") < self.train_cut
         )
-        if committed:
-            offsets = spark.read.parquet(
-                os.path.join(self.state_dir, "offsets", f"v{committed[-1]}")
-            )
-        else:
+        offsets = self.store.latest(spark, self._family("offsets"), below=epoch_id)
+        if offsets is None:
             offsets = spark.createDataFrame([], "source string, total long")
         w = (
             Window.partitionBy("source")
@@ -224,17 +213,9 @@ class StreamingCurationPipeline:
             )
         )
         writes = [
-            (
-                survivors.select("text_md5", "doc_id"),
-                os.path.join(self.state_dir, "hashes"),
-                "text_md5",
-            ),
+            (survivors.select("text_md5", "doc_id"), self._family("hashes"), "text_md5"),
             (packed, self.out_dir, "source"),
-            (
-                new_offsets,
-                os.path.join(self.state_dir, "offsets"),
-                "source",
-            ),
+            (new_offsets, self._family("offsets"), "source"),
         ]
         # the shingle inverted index is state FOR the near-dup probe
         # (2c) — when the probe is disabled nothing ever reads it, and
@@ -243,17 +224,17 @@ class StreamingCurationPipeline:
         # queries and the composed pipeline all run with
         # neardup_threshold=None). A deployment enabling the probe
         # mid-stream must backfill the index for pre-enable epochs
-        # either way, so the gate loses nothing.
+        # either way (the constructor checks), so the gate loses nothing.
         if self.neardup_threshold is not None:
             writes.insert(
                 1,
                 (
                     self._hashed_shingles(survivors.select("doc_id", "text")),
-                    os.path.join(self.state_dir, "shingles"),
+                    self._family("shingles"),
                     "shingle",
                 ),
             )
-        self._write_all(writes, epoch_id)
-        survivors.unpersist()
-        if self.autocommit:
-            self._finalize(epoch_id)
+        try:
+            self.store.submit(writes, epoch_id)()
+        finally:
+            survivors.unpersist()

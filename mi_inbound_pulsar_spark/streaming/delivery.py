@@ -29,16 +29,15 @@ do not double-count redeliveries.
 from __future__ import annotations
 
 import os
-import shutil
 import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from mi_inbound_pulsar_spark.config import DeadLetterPolicy
+from mi_inbound_pulsar_spark.streaming.epochstore import EpochStore
 
 PipelineFn = Callable[[DataFrame, int], None]
 
@@ -291,16 +290,16 @@ class KeyedRetryPipeline:
     contract: PulsarMessageConsumer.java:203-227 (ack after process),
     :295-304 (DLQ after max redeliveries).
 
-    State layout: ``state_dir/v<epoch>/`` parquet, written through a
-    keyed ``hash(message_id)`` exchange with no pinned partition count,
-    so AQE coalesces a tiny epoch to one file while a large one still
-    fans out to ``spark.sql.shuffle.partitions``; a commit marker
-    under ``state_dir/_commits/<epoch>`` lands only after the write
-    succeeds. An invocation at epoch N reads the newest *committed*
-    version with epoch < N, so a replayed micro-batch (crash between
-    state write and offset commit) deterministically rewrites the same
-    version instead of double-bumping redelivery counts — last-write-
-    wins upsert, idempotent under K3 replay.
+    State layout (:mod:`.epochstore` owns the protocol): the snapshot
+    ``state_dir/v<epoch>/`` and the DLQ delta ``dlq_dir/v<epoch>/``,
+    written in that order DLQ → state → ``state_dir/_commits/<epoch>``
+    marker, keyed by ``message_id``. The store keeps the two newest
+    markers and state versions; DLQ versions are never collected. An
+    invocation at epoch N reads the newest *committed* version with
+    epoch < N, so a replayed micro-batch (crash between state write and
+    offset commit) deterministically rewrites the same version instead
+    of double-bumping redelivery counts — last-write-wins upsert,
+    idempotent under K3 replay.
 
     ``process(deliver_df, epoch) -> DataFrame[(message_id, ok bool)]``
     decides per-record outcomes. Only ``ok = TRUE`` acks; ``ok = FALSE``
@@ -322,17 +321,6 @@ class KeyedRetryPipeline:
     the state write. The state read passes the schema of the version
     this instance last committed, so only a freshly constructed
     instance (e.g. after a restart) infers it from the files.
-
-    Epoch-ordering contract: Structured Streaming's ``foreachBatch``
-    delivers epochs sequentially per query — epoch N is retried until
-    committed before N+1 starts, so at most the SINGLE newest epoch can
-    ever be in-flight (torn). Readers must not rely on "epoch ≤ newest
-    marker" alone for visibility (an out-of-order replay of an old
-    epoch inside the GC retention window would briefly expose its torn
-    rewrite); ``dead_letters_df`` therefore intersects with marker
-    membership for epochs whose markers still exist, and admits older
-    epochs only below the oldest surviving marker (a marker is GC'd
-    only after newer commits, so everything below it was committed).
     """
 
     _META = ("_retry_count", "_retry_last", "_retry_pending_ack")
@@ -358,38 +346,7 @@ class KeyedRetryPipeline:
         self.backoff_multiplier = backoff_multiplier
         self.max_delay_ms = max_delay_ms
         self.clock = clock
-        # (epoch, schema) of the newest state version this instance wrote
-        self._committed_schema: tuple[int, StructType] | None = None
-        os.makedirs(os.path.join(state_dir, "_commits"), exist_ok=True)
-
-    # -- state-table plumbing ------------------------------------------------
-    def _committed_epochs(self) -> list[int]:
-        d = os.path.join(self.state_dir, "_commits")
-        return sorted(int(f) for f in os.listdir(d)) if os.path.isdir(d) else []
-
-    def _read_state(self, spark: SparkSession, epoch_id: int) -> DataFrame | None:
-        prior = [e for e in self._committed_epochs() if e < epoch_id]
-        if not prior:
-            return None
-        reader = spark.read
-        if self._committed_schema and self._committed_schema[0] == prior[-1]:
-            reader = reader.schema(self._committed_schema[1])  # no inference job
-        return reader.parquet(os.path.join(self.state_dir, f"v{prior[-1]}"))
-
-    def _commit(self, df: DataFrame, root: str, epoch_id: int) -> None:
-        path = os.path.join(root, f"v{epoch_id}")
-        shutil.rmtree(path, ignore_errors=True)  # replayed epoch: rewrite
-        # AQE-coalescible keyed exchange, as in curation._write
-        df.repartition("message_id").write.mode("overwrite").parquet(path)
-
-    def _finalize(self, epoch_id: int) -> None:
-        marker = os.path.join(self.state_dir, "_commits", str(epoch_id))
-        with open(marker, "w"):
-            pass
-        # GC: keep the two newest committed versions
-        for old in self._committed_epochs()[:-2]:
-            shutil.rmtree(os.path.join(self.state_dir, f"v{old}"), ignore_errors=True)
-            os.unlink(os.path.join(self.state_dir, "_commits", str(old)))
+        self.store = EpochStore(state_dir)
 
     def _delay_col(self):
         count = F.col("_retry_count")
@@ -408,7 +365,7 @@ class KeyedRetryPipeline:
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
         now = self.clock()
         spark = batch_df.sparkSession
-        state = self._read_state(spark, epoch_id)
+        state = self.store.latest(spark, self.state_dir, below=epoch_id)
 
         fresh = batch_df.withColumn("redelivery_count", F.lit(0))
         if state is not None:
@@ -456,50 +413,27 @@ class KeyedRetryPipeline:
             if held is not None:
                 live = live.unionByName(held)
 
-            self._commit(
+            self.store.write(
                 dead.withColumn("redelivery_count", F.col("_retry_count")).drop(*self._META),
                 self.dlq_dir,
                 epoch_id,
+                "message_id",
             )
-            self._commit(live, self.state_dir, epoch_id)
-            self._finalize(epoch_id)
-            self._committed_schema = (epoch_id, live.schema)
+            self.store.write(live, self.state_dir, epoch_id, "message_id")
+            self.store.commit(epoch_id, retain=2)  # keep two state versions
         finally:
             parked.unpersist()
 
     # -- inspection helpers (tests / ops) -----------------------------------
     def state_df(self, spark: SparkSession) -> DataFrame | None:
-        epochs = self._committed_epochs()
-        if not epochs:
-            return None
-        return spark.read.parquet(os.path.join(self.state_dir, f"v{epochs[-1]}"))
+        return self.store.latest(spark, self.state_dir)
 
     def dead_letters_df(self, spark: SparkSession) -> DataFrame | None:
         """Union of the COMMITTED per-epoch DLQ versions. A crash
         between the DLQ write and the state write leaves a dlq
-        ``v<epoch>`` with no marker — those rows must stay invisible
-        until the epoch's replay completes, or a reader double-counts
-        them (found by the torn-epoch injection test). Visibility is
-        marker MEMBERSHIP for epochs inside the GC retention window,
-        plus everything below the oldest surviving marker (GC'd markers
-        were committed by construction — a marker is only removed after
-        newer commits). "epoch ≤ newest marker" alone would briefly
-        expose the torn rewrite of an out-of-order replayed old epoch
-        (ADVICE r8, delivery.py:455); the class contract states the
-        sequential-epoch invariant this guards.
-        """
-        committed = self._committed_epochs()
-        if not committed or not os.path.isdir(self.dlq_dir):
-            return None
-        marked, lo = set(committed), committed[0]
-        versions = [
-            os.path.join(self.dlq_dir, d)
-            for d in sorted(os.listdir(self.dlq_dir))
-            if d.startswith("v")
-            and d[1:].isdigit()
-            and (int(d[1:]) in marked or int(d[1:]) < lo)
-            and os.path.isdir(os.path.join(self.dlq_dir, d))
-        ]
-        if not versions:
-            return None
-        return spark.read.parquet(*versions)
+        ``v<epoch>`` with no marker — those rows stay invisible until
+        the epoch's replay completes, or a reader would double-count
+        them (found by the torn-epoch injection test). DLQ versions
+        outlive the GC'd state markers; :meth:`EpochStore.union` states
+        the visibility rule."""
+        return self.store.union(spark, self.dlq_dir)

@@ -2,15 +2,14 @@
 release control run per micro-batch in ``foreachBatch``, with the
 cross-batch quasi-identifier statistics as persisted state — the
 privacy companion of :mod:`mi_inbound_pulsar_spark.streaming.curation`
-(same state design: per-epoch parquet + commit markers, idempotent
-epoch rewrite).
+(same state design: one :mod:`.epochstore` protocol).
 
 The streaming twist over the batch audits (``q_k_anonymity`` /
 ``q_l_diversity``, aggstats.py): a record may arrive BEFORE its
 quasi-identifier class is safe to release. The pipeline **parks** such
 records and releases them in the first epoch whose cumulative class
-statistics satisfy both thresholds (park-and-release — the
-``KeyedRetryPipeline`` recipe applied to privacy):
+statistics satisfy both thresholds (park-and-release). State families,
+written through :class:`.epochstore.EpochStore`:
 
 - ``state_dir/stats/v<epoch>/`` — full snapshot of per-(class, band)
   cumulative counts. Bounded by |QI domain| × |band domain| (tiny by
@@ -21,9 +20,9 @@ statistics satisfy both thresholds (park-and-release — the
   the rows of never-qualifying classes.
 - ``out_dir/v<epoch>/`` — records released this epoch, with their
   ``release_epoch``.
-- ``state_dir/_commits/<epoch>`` — landed only after all writes of
-  the epoch succeed; a replayed epoch rewrites the same ``v<epoch>``
-  dirs (exactly-once from at-least-once, the K3 contract).
+- ``state_dir/_commits/<epoch>`` — the store's commit marker, landed
+  after all three writes; a replayed epoch rewrites the same
+  ``v<epoch>`` dirs (exactly-once from at-least-once, the K3 contract).
 
 Release is MONOTONE (cumulative counts only grow), so the union of
 committed outputs over any batch decomposition equals the single-shot
@@ -35,12 +34,11 @@ tests/test_streaming_privacy.py and hash-checked by
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mi_inbound_pulsar_spark.streaming.epochio import submit_writes, write_all
+from mi_inbound_pulsar_spark.streaming.epochstore import EpochStore
 
 K_ANON = 5
 L_DIVERSE = 3
@@ -74,7 +72,6 @@ class StreamingPrivacyPipeline:
         k: int = K_ANON,
         l_div: int = L_DIVERSE,
         num_partitions: int | None = None,
-        autocommit: bool = True,
     ):
         self.state_dir = state_dir
         self.out_dir = out_dir
@@ -84,45 +81,13 @@ class StreamingPrivacyPipeline:
         self.text_col = text_col
         self.k = k
         self.l_div = l_div
-        # autocommit=False → a composing caller owns the epoch's single
-        # commit marker (streaming/composed.py); state reads still key
-        # off this state_dir's _commits, which the composer shares
-        self.autocommit = autocommit
-        os.makedirs(os.path.join(state_dir, "_commits"), exist_ok=True)
-
-    # -- state plumbing (the StreamingCurationPipeline recipe) --------------
-    def _committed_epochs(self) -> list[int]:
-        d = os.path.join(self.state_dir, "_commits")
-        return sorted(int(f) for f in os.listdir(d)) if os.path.isdir(d) else []
-
-    def _write(self, df: DataFrame, root: str, epoch_id: int, key: str) -> None:
-        path = os.path.join(root, f"v{epoch_id}")
-        shutil.rmtree(path, ignore_errors=True)  # replayed epoch: rewrite
-        # AQE-coalescible keyed exchange — see curation._write (round 13)
-        df.repartition(F.col(key)).write.mode("overwrite").parquet(path)
-
-    # concurrent epoch-family writes; one shared implementation so the
-    # crash-seam contract cannot diverge between pipelines (epochio.py;
-    # plain class-level assignment binds it as a method, self=pipeline)
-    _write_all = write_all
-
-    def _finalize(self, epoch_id: int) -> None:
-        with open(os.path.join(self.state_dir, "_commits", str(epoch_id)), "w"):
-            pass
+        self.store = EpochStore(state_dir)
 
     def read_output(self, spark: SparkSession) -> DataFrame | None:
-        paths = [
-            os.path.join(self.out_dir, f"v{e}") for e in self._committed_epochs()
-        ]
-        return spark.read.parquet(*paths) if paths else None
+        return self.store.union(spark, self.out_dir)
 
     def read_pending(self, spark: SparkSession) -> DataFrame | None:
-        committed = self._committed_epochs()
-        if not committed:
-            return None
-        return spark.read.parquet(
-            os.path.join(self.state_dir, "pending", f"v{committed[-1]}")
-        )
+        return self.store.latest(spark, os.path.join(self.state_dir, "pending"))
 
     def _redacted(self, df: DataFrame) -> DataFrame:
         if self.text_col is None:
@@ -141,8 +106,7 @@ class StreamingPrivacyPipeline:
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
         _released, wait = self._run(batch_df, epoch_id)
         wait()
-        if self.autocommit:
-            self._finalize(epoch_id)
+        self.store.commit(epoch_id)
 
     def _run(self, batch_df: DataFrame, epoch_id: int):
         """Compute the epoch, SUBMIT its three family writes as
@@ -150,13 +114,13 @@ class StreamingPrivacyPipeline:
         ``(released_frame, wait)`` — the deferred form a composing
         caller (streaming/composed.py) uses to overlap these writes
         with the next gate's compute. ``wait()`` joins every write
-        (raising the first failure only after all have settled) and
-        releases the epoch's caches; the caller owns the commit
-        marker. The released frame derives from the PERSISTED
+        (:meth:`.EpochStore.submit`) and releases the epoch's caches;
+        the caller owns the commit marker. The released frame derives from the PERSISTED
         candidates cache, so a consumer reading it computes the same
         rows the concurrent ``released`` dir write lands."""
         spark = batch_df.sparkSession
-        committed = [e for e in self._committed_epochs() if e < epoch_id]
+        stats_root = os.path.join(self.state_dir, "stats")
+        pending_root = os.path.join(self.state_dir, "pending")
         qi = self.qi_cols
 
         arrivals = self._redacted(batch_df).withColumn(
@@ -167,10 +131,8 @@ class StreamingPrivacyPipeline:
         batch_stats = arrivals.groupBy(*qi, self.band_col).agg(
             F.count(F.lit(1)).alias("n")
         )
-        if committed:
-            prev = spark.read.parquet(
-                os.path.join(self.state_dir, "stats", f"v{committed[-1]}")
-            )
+        prev = self.store.latest(spark, stats_root, below=epoch_id)
+        if prev is not None:
             stats = (
                 prev.unionByName(batch_stats)
                 .groupBy(*qi, self.band_col)
@@ -196,10 +158,8 @@ class StreamingPrivacyPipeline:
 
         # 3. park-and-release: prior pending ∪ this batch, split by class
         # safety. The safe-class frame is QI-domain-bounded → broadcast.
-        if committed:
-            pending = spark.read.parquet(
-                os.path.join(self.state_dir, "pending", f"v{committed[-1]}")
-            )
+        pending = self.store.latest(spark, pending_root, below=epoch_id)
+        if pending is not None:
             candidates = pending.unionByName(arrivals)
         else:
             candidates = arrivals
@@ -219,15 +179,10 @@ class StreamingPrivacyPipeline:
         # computed partition is deduped at BlockManager put, only the
         # tiny upstream compute is duplicated) beats two waves —
         # measured on the full replay, min-of-3 interleaved.
-        wait_writes = submit_writes(
-            self,
+        wait_writes = self.store.submit(
             [
-                (stats, os.path.join(self.state_dir, "stats"), qi[0]),
-                (
-                    still_pending,
-                    os.path.join(self.state_dir, "pending"),
-                    self.id_col,
-                ),
+                (stats, stats_root, qi[0]),
+                (still_pending, pending_root, self.id_col),
                 (released, self.out_dir, self.id_col),
             ],
             epoch_id,

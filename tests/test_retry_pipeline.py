@@ -326,25 +326,25 @@ def test_keyed_retry_crash_between_dlq_and_state_replays_cleanly(spark, tmp_path
     pipe(frame(range(1, 11)), 0)
     state_v0 = sorted(r["message_id"] for r in pipe.state_df(spark).collect())
 
-    orig = pipe._commit
+    orig = pipe.store.write
     calls = {"n": 0}
 
-    def torn(df, root, epoch_id):
-        orig(df, root, epoch_id)
+    def torn(df, root, epoch_id, key):
+        orig(df, root, epoch_id, key)
         calls["n"] += 1
         if calls["n"] == 1:  # DLQ landed; kill before the state write
             raise RuntimeError("injected crash mid-epoch")
 
-    pipe._commit = torn
+    pipe.store.write = torn
     with pytest.raises(RuntimeError, match="injected crash"):
         pipe(frame([]), 1)
-    pipe._commit = orig
+    pipe.store.write = orig
 
     # torn epoch on disk, invisible to readers
     import os
 
     assert os.path.isdir(str(tmp_path / "td" / "v1"))
-    assert pipe._committed_epochs() == [0]
+    assert pipe.store.committed() == [0]
     assert pipe.dead_letters_df(spark) is None or (
         pipe.dead_letters_df(spark).count() == 0
     )
@@ -353,7 +353,7 @@ def test_keyed_retry_crash_between_dlq_and_state_replays_cleanly(spark, tmp_path
     ) == state_v0
 
     pipe(frame([]), 1)  # restart replay
-    assert pipe._committed_epochs() == [0, 1]
+    assert pipe.store.committed() == [0, 1]
     got_dead = sorted(
         (r["message_id"], r["redelivery_count"])
         for r in pipe.dead_letters_df(spark).collect()

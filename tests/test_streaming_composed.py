@@ -57,7 +57,7 @@ def test_release_order_packing_and_single_protocol(spark):
     pipe(b1, 1)
 
     # one marker per epoch, shared by all state families
-    assert pipe._committed_epochs() == [0, 1]
+    assert pipe.store.committed() == [0, 1]
     rel = {
         r["doc_id"]: r["release_epoch"]
         for r in pipe.read_released(spark).collect()
@@ -129,7 +129,7 @@ def test_crash_between_privacy_and_curation_replays_cleanly(spark):
     inner = pipe.curation
 
     class Boom:
-        def __call__(self, df, epoch_id):
+        def _run(self, df, epoch_id):
             raise RuntimeError("injected crash between gates")
 
         def __getattr__(self, name):
@@ -145,10 +145,10 @@ def test_crash_between_privacy_and_curation_replays_cleanly(spark):
     assert os.path.isdir(os.path.join(pipe.state_dir, "stats", "v1"))
     assert os.path.isdir(os.path.join(pipe.state_dir, "released", "v1"))
     assert not os.path.isdir(os.path.join(pipe.state_dir, "hashes", "v1"))
-    assert pipe._committed_epochs() == [0]
+    assert pipe.store.committed() == [0]
 
     pipe(b1, 1)  # restart replay
-    assert pipe._committed_epochs() == [0, 1]
+    assert pipe.store.committed() == [0, 1]
     got = sorted(
         (r["doc_id"], r["stream_offset"]) for r in pipe.read_output(spark).collect()
     )
@@ -182,17 +182,17 @@ def test_crash_between_redaction_and_privacy_state_write(spark):
     pipe = _pipe()
     pipe(b0, 0)
     prv = pipe.privacy
-    real_write = prv._write
+    real_write = prv.store.write
 
     def torn_write(df, root, epoch_id, key):
         real_write(df, root, epoch_id, key)
         if os.path.basename(root) == "stats" and epoch_id == 1:
             raise RuntimeError("injected crash after stats write")
 
-    prv._write = torn_write
+    prv.store.write = torn_write
     with pytest.raises(RuntimeError, match="after stats write"):
         pipe(b1, 1)
-    prv._write = real_write
+    prv.store.write = real_write
 
     # torn epoch: stats/v1 landed; its CONCURRENT siblings (pending/
     # released) may have landed too — the protocol doesn't order
@@ -202,10 +202,10 @@ def test_crash_between_redaction_and_privacy_state_write(spark):
     # surfaced — the contract is the missing marker (readers stay
     # blind to every torn family), not any particular landing order.
     assert os.path.isdir(os.path.join(pipe.state_dir, "stats", "v1"))
-    assert pipe._committed_epochs() == [0]
+    assert pipe.store.committed() == [0]
 
     pipe(b1, 1)  # restart replay rewrites stats/v1 from the v0 snapshot
-    assert pipe._committed_epochs() == [0, 1]
+    assert pipe.store.committed() == [0, 1]
     got = sorted(
         (r["doc_id"], r["stream_offset"]) for r in pipe.read_output(spark).collect()
     )
@@ -240,31 +240,31 @@ def test_same_epoch_torn_twice_replays_cleanly(spark):
     # crash #1: inside the privacy families (after pending, before
     # released) — stats/v1 + pending/v1 exist, released/v1 doesn't
     prv = pipe.privacy
-    real_write = prv._write
+    real_write = prv.store.write
 
     def torn_write(df, root, epoch_id, key):
         real_write(df, root, epoch_id, key)
         if os.path.basename(root) == "pending" and epoch_id == 1:
             raise RuntimeError("injected crash one")
 
-    prv._write = torn_write
+    prv.store.write = torn_write
     with pytest.raises(RuntimeError, match="crash one"):
         pipe(b1, 1)
-    prv._write = real_write
+    prv.store.write = real_write
     # pending/v1 landed; its concurrent privacy siblings may have too
     # (intra-phase writes are unordered since round 11), and since
     # round 13 curation overlaps the privacy writes so its families
     # may also have landed before the failure surfaced. No marker
     # landed — that is the contract under test.
     assert os.path.isdir(os.path.join(pipe.state_dir, "pending", "v1"))
-    assert pipe._committed_epochs() == [0]
+    assert pipe.store.committed() == [0]
 
     # crash #2 (same epoch): privacy fully lands this time, curation
     # never runs — the OTHER seam
     inner = pipe.curation
 
     class Boom:
-        def __call__(self, df, epoch_id):
+        def _run(self, df, epoch_id):
             raise RuntimeError("injected crash two")
 
         def __getattr__(self, name):
@@ -279,10 +279,10 @@ def test_same_epoch_torn_twice_replays_cleanly(spark):
     # — the replay contract is idempotent under arbitrary prefixes,
     # and no marker landed either time
     assert os.path.isdir(os.path.join(pipe.state_dir, "released", "v1"))
-    assert pipe._committed_epochs() == [0]
+    assert pipe.store.committed() == [0]
 
     pipe(b1, 1)  # third attempt: clean end-to-end rewrite of v1
-    assert pipe._committed_epochs() == [0, 1]
+    assert pipe.store.committed() == [0, 1]
     # no "shingles": the composed config runs with the near-dup probe
     # disabled, and since round 13 the unread shingle index is not written
     for fam in ("stats", "pending", "released", "hashes", "offsets"):
@@ -318,28 +318,67 @@ def test_crash_inside_curation_families_replays_cleanly(spark):
     pipe = _pipe()
     pipe(b0, 0)
     cur = pipe.curation
-    real_write = cur._write
+    real_write = cur.store.write
 
     def torn_write(df, root, epoch_id, key):
         real_write(df, root, epoch_id, key)
         if os.path.basename(root) == "hashes" and epoch_id == 1:
             raise RuntimeError("injected crash inside curation")
 
-    cur._write = torn_write
+    cur.store.write = torn_write
     with pytest.raises(RuntimeError, match="inside curation"):
         pipe(b1, 1)
-    cur._write = real_write
+    cur.store.write = real_write
 
     # torn epoch: privacy families + the crashed curation family
     # landed; curation's concurrent siblings may or may not have. No
     # marker either way — readers blind to the whole epoch.
     assert os.path.isdir(os.path.join(pipe.state_dir, "released", "v1"))
     assert os.path.isdir(os.path.join(pipe.state_dir, "hashes", "v1"))
-    assert pipe._committed_epochs() == [0]
+    assert pipe.store.committed() == [0]
 
     pipe(b1, 1)  # replay rewrites every v1 family
-    assert pipe._committed_epochs() == [0, 1]
+    assert pipe.store.committed() == [0, 1]
     got = sorted(
         (r["doc_id"], r["stream_offset"]) for r in pipe.read_output(spark).collect()
     )
     assert got == want and got
+
+
+def test_curation_error_keeps_privacy_write_failure(spark):
+    """Curation raises while a concurrent privacy write also fails: the
+    curation error is the one raised, the privacy failure is reachable
+    from it, no marker lands, and the replay completes."""
+    b0 = _frame(spark, [_doc(i, "en", i % 3) for i in range(0, 8)])
+    b1 = _frame(spark, [_doc(i, "en", i % 3) for i in range(8, 14)])
+
+    pipe = _pipe()
+    pipe(b0, 0)
+    store, inner = pipe.store, pipe.curation
+    real_write = store.write
+
+    def torn_write(df, root, epoch_id, key):
+        if os.path.basename(root) == "stats" and epoch_id == 1:
+            raise RuntimeError("injected privacy write failure")
+        real_write(df, root, epoch_id, key)
+
+    class Boom:
+        def _run(self, df, epoch_id):
+            raise RuntimeError("injected curation failure")
+
+        def __getattr__(self, name):
+            return getattr(inner, name)
+
+    store.write, pipe.curation = torn_write, Boom()
+    with pytest.raises(RuntimeError, match="curation failure") as ei:
+        pipe(b1, 1)
+    store.write, pipe.curation = real_write, inner
+
+    notes = "".join(ei.value.__notes__)
+    assert "privacy-gate writes also failed" in notes
+    assert "RuntimeError: injected privacy write failure" in notes
+    assert store.committed() == [0]
+
+    pipe(b1, 1)  # restart replay
+    assert store.committed() == [0, 1]
+    assert 1 in {r["release_epoch"] for r in pipe.read_released(spark).collect()}

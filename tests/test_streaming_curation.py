@@ -57,7 +57,7 @@ def test_streaming_curation_matches_batch_twin(spark, sf_dir):
     q.processAllAvailable()
     q.stop()
 
-    assert len(pipe._committed_epochs()) >= 3  # really a micro-batch sequence
+    assert len(pipe.store.committed()) >= 3  # really a micro-batch sequence
     got = {
         (r.doc_id, r.source, r.n_tokens, r.stream_offset, r.pack_start)
         for r in pipe.read_output(spark).collect()
@@ -163,26 +163,26 @@ def test_crash_between_state_writes_replays_cleanly(spark):
     pipe = _pipe("curation_torn_")
     pipe(frame(0, 40), 0)
 
-    orig_write = pipe._write
+    orig_write = pipe.store.write
 
     def torn_write(df, root, epoch_id, key):
         orig_write(df, root, epoch_id, key)
         if os.path.basename(root) == "hashes" and epoch_id == 1:
             raise RuntimeError("injected crash mid-epoch")
 
-    pipe._write = torn_write
+    pipe.store.write = torn_write
     with pytest.raises(RuntimeError, match="injected crash"):
         pipe(frame(40, 80), 1)
-    pipe._write = orig_write
+    pipe.store.write = orig_write
 
     # hashes/v1 landed; its concurrent sibling families may or may
     # not have (intra-epoch writes are unordered since round 11) — no
     # marker landed, which is all the contract promises
     assert os.path.isdir(os.path.join(pipe.state_dir, "hashes", "v1"))
-    assert pipe._committed_epochs() == [0]
+    assert pipe.store.committed() == [0]
 
     pipe(frame(40, 80), 1)  # restart replay
-    assert pipe._committed_epochs() == [0, 1]
+    assert pipe.store.committed() == [0, 1]
     got = {
         (r.doc_id, r.stream_offset, r.pack_start)
         for r in pipe.read_output(spark).collect()
@@ -192,3 +192,28 @@ def test_crash_between_state_writes_replays_cleanly(spark):
     off = spark.read.parquet(os.path.join(pipe.state_dir, "offsets", "v1"))
     ctl_off = spark.read.parquet(os.path.join(ctl.state_dir, "offsets", "v1"))
     assert sorted(map(tuple, off.collect())) == sorted(map(tuple, ctl_off.collect()))
+
+
+def test_neardup_probe_without_shingle_backfill_fails_fast(spark):
+    """Two epochs committed with the probe off have no shingle index;
+    turning the probe on over that state fails at construction and
+    names the epochs to backfill, instead of a path-not-found mid-batch."""
+    import pytest
+
+    from mi_inbound_pulsar_spark.streaming.curation import StreamingCurationPipeline
+
+    pipe = _pipe("curation_backfill_")
+    for e in range(2):
+        text = " ".join(f"w{e}t{j}" for j in range(25))
+        pipe(
+            spark.createDataFrame(
+                [(e, "web", text)], "doc_id long, source string, text string"
+            ),
+            e,
+        )
+    assert pipe.store.committed() == [0, 1]
+
+    with pytest.raises(ValueError, match=r"\[0, 1\].*backfill"):
+        StreamingCurationPipeline(
+            state_dir=pipe.state_dir, out_dir=pipe.out_dir, neardup_threshold=0.5
+        )

@@ -156,23 +156,23 @@ def test_crash_between_state_writes_replays_cleanly(spark):
     pipe = _pipe(spark)
     pipe(b0, 0)
 
-    orig_write = pipe._write
+    orig_write = pipe.store.write
 
     def torn_write(df, root, epoch_id, key):
         orig_write(df, root, epoch_id, key)
         if os.path.basename(root) == "stats" and epoch_id == 1:
             raise RuntimeError("injected crash mid-epoch")
 
-    pipe._write = torn_write
+    pipe.store.write = torn_write
     with pytest.raises(RuntimeError, match="injected crash"):
         pipe(b1, 1)
-    pipe._write = orig_write
+    pipe.store.write = orig_write
 
     # torn state on disk: stats/v1 exists (its concurrent siblings may
     # too — intra-epoch writes are unordered since round 11), no
     # marker, readers blind to the whole epoch
     assert os.path.isdir(os.path.join(pipe.state_dir, "stats", "v1"))
-    assert pipe._committed_epochs() == [0]
+    assert pipe.store.committed() == [0]
     assert all(
         r["release_epoch"] == 0 for r in pipe.read_output(spark).collect()
     )
@@ -180,7 +180,7 @@ def test_crash_between_state_writes_replays_cleanly(spark):
     # restart: at-least-once redelivers epoch 1; the replay must
     # rewrite the torn stats/v1 (not add to it) and land everything
     pipe(b1, 1)
-    assert pipe._committed_epochs() == [0, 1]
+    assert pipe.store.committed() == [0, 1]
     got_out = sorted(
         (r["rid"], r["release_epoch"]) for r in pipe.read_output(spark).collect()
     )
