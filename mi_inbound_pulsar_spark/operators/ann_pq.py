@@ -370,202 +370,3 @@ def q_ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return totals.crossJoin(n_hit).select(
         "n_queries", (F.col("hits") / F.col("n_exact") >= 0.7).alias("recall_ok")
     )
-
-
-# --------------------------------------------------------------------------
-# Residual encoding: PQ over (unit − centroid[cell]) — the FAISS IVF-PQ form
-# --------------------------------------------------------------------------
-def train_residual_codebooks(
-    corpus: DataFrame,
-    centroids: np.ndarray,
-    m: int = M_SUB,
-    ksub: int = K_SUB,
-    n_iter: int = PQ_ITER,
-) -> np.ndarray:
-    """Train per-subspace codebooks on IVF residuals. Residuals are
-    computed inside the same pass (centroids broadcast), so training
-    is still one narrow ``mapInPandas`` per iteration. Quantizing the
-    residual instead of the raw vector spends the code budget on the
-    *within-cell* variance — the across-cell variance is already paid
-    for by the coarse quantizer — which is why FAISS encodes IVF-PQ
-    this way."""
-    vecs = corpus.select("vec_id", "embedding")
-    sc = corpus.sparkSession.sparkContext
-    cent_bc = sc.broadcast(centroids)
-
-    init_ids, init_mat = _collect_matrix(vecs.orderBy("vec_id").limit(ksub), "vec_id", "embedding")
-    _, init_units = _unit_rows(init_ids, init_mat)
-    best = np.argmax(init_units @ centroids.T, axis=1)
-    init_res = init_units - centroids[best]
-    dim = init_units.shape[1]
-    dsub = dim // m
-    books = np.stack([init_res[:, j * dsub : (j + 1) * dsub] for j in range(m)])
-
-    partial_schema = "subspace long, code long, cnt long, vec_sum array<double>"
-    for _ in range(n_iter):
-        books_bc = sc.broadcast(books)
-
-        def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            cents = cent_bc.value
-            bks = books_bc.value
-            m_, k_, d_ = bks.shape
-            acc_cnt = np.zeros((m_, k_), dtype=np.int64)
-            acc_sum = np.zeros_like(bks)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                mat = np.array(list(pdf["embedding"]), dtype=np.float64)
-                _, units = _unit_rows(np.arange(len(mat)), mat)
-                res = units - cents[np.argmax(units @ cents.T, axis=1)]
-                for j in range(m_):
-                    sub = res[:, j * d_ : (j + 1) * d_]
-                    scores = sub @ bks[j].T - 0.5 * (bks[j] ** 2).sum(axis=1)
-                    bidx = np.argmax(scores, axis=1)
-                    acc_cnt[j] += np.bincount(bidx, minlength=k_)
-                    np.add.at(acc_sum[j], bidx, sub)
-            js, ks = np.nonzero(acc_cnt)
-            if js.size == 0:
-                # empty partition: yield nothing — an empty frame's
-                # "vec_sum" column infers as float64 and Arrow cannot
-                # convert it to list<double> (see train_spherical_kmeans)
-                return
-            yield pd.DataFrame(
-                {
-                    "subspace": js.astype(np.int64),
-                    "code": ks.astype(np.int64),
-                    "cnt": acc_cnt[js, ks],
-                    "vec_sum": list(acc_sum[js, ks]),
-                }
-            )
-
-        rows = vecs.mapInPandas(partials, schema=partial_schema).collect()
-        books_bc.destroy()
-        new_cnt = np.zeros((m, ksub), dtype=np.int64)
-        new_sum = np.zeros_like(books)
-        for r in rows:
-            new_cnt[r.subspace, r.code] += r.cnt
-            new_sum[r.subspace, r.code] += np.asarray(r.vec_sum, dtype=np.float64)
-        nxt = books.copy()
-        moved = new_cnt > 0
-        nxt[moved] = new_sum[moved] / new_cnt[moved][:, None]
-        books = nxt
-    return books
-
-
-def pq_encode_residual(corpus: DataFrame, centroids: np.ndarray, books: np.ndarray) -> DataFrame:
-    """Encode residual (unit − assigned centroid) to m codes, emitting
-    (vec_id, cell, codes) — cell + 8 bytes is the whole index row."""
-    sc = corpus.sparkSession.sparkContext
-    cent_bc = sc.broadcast(centroids)
-    books_bc = sc.broadcast(books)
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cents = cent_bc.value
-        bks = books_bc.value
-        m_, k_, d_ = bks.shape
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            mat = np.array(list(pdf["embedding"]), dtype=np.float64)
-            _, units = _unit_rows(np.arange(len(mat)), mat)
-            cell = np.argmax(units @ cents.T, axis=1)
-            res = units - cents[cell]
-            codes = np.empty((len(mat), m_), dtype=np.int64)
-            for j in range(m_):
-                sub = res[:, j * d_ : (j + 1) * d_]
-                scores = sub @ bks[j].T - 0.5 * (bks[j] ** 2).sum(axis=1)
-                codes[:, j] = np.argmax(scores, axis=1)
-            yield pd.DataFrame({"vec_id": ids, "cell": cell.astype(np.int64), "codes": list(codes)})
-
-    return corpus.select("vec_id", "embedding").mapInPandas(
-        encode, schema="vec_id long, cell long, codes array<long>"
-    )
-
-
-def ivfpq_residual_topk(
-    spark: SparkSession, sf_dir: str, n_probe: int = IVFPQ_PROBE
-) -> DataFrame:
-    """IVF-PQ with residual encoding: score(q, x) ≈ q·c_cell + Σ_j
-    LUT_j[code_j] — the q·centroid term rides on the (broadcast) probe
-    table, the residual term is the same 8-lookup ADC sum."""
-    from mi_inbound_pulsar_spark.operators.ann_kmeans import train_spherical_kmeans
-
-    e = load_table(spark, sf_dir, "embeddings")
-    centroids = train_spherical_kmeans(e)
-    books = train_residual_codebooks(e, centroids)
-    coded = pq_encode_residual(e, centroids, books)
-
-    q_ids, q_mat = _collect_matrix(e.filter(F.col("vec_id") < N_QUERIES), "vec_id", "embedding")
-    q_ids, q_units = _unit_rows(q_ids, q_mat)
-    m_, k_, d_ = books.shape
-    lut = np.stack(
-        [[qu[j * d_ : (j + 1) * d_] @ books[j].T for j in range(m_)] for qu in q_units]
-    )
-    probe_sims = q_units @ centroids.T
-    probe_rows = [
-        (int(q_ids[qi]), int(ci), float(probe_sims[qi, ci]))
-        for qi in range(len(q_ids))
-        for ci in np.lexsort((np.arange(len(centroids)), -probe_sims[qi]))[:n_probe]
-    ]
-    probes = F.broadcast(
-        spark.createDataFrame(probe_rows, "query_id long, cell long, q_dot_c double")
-    )
-    cand = coded.join(probes, "cell").select("query_id", "vec_id", "codes", "q_dot_c")
-
-    sc = spark.sparkContext
-    lut_bc = sc.broadcast((q_ids, lut))
-
-    def adc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids, tables = lut_bc.value
-        qidx = {int(q): i for i, q in enumerate(qids)}
-        cols = np.arange(tables.shape[1])
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            qs = pdf["query_id"].to_numpy(dtype=np.int64)
-            cd = np.array(list(pdf["codes"]), dtype=np.int64)
-            qrows = np.array([qidx[int(q)] for q in qs])
-            approx = tables[qrows[:, None], cols[None, :], cd].sum(axis=1) + pdf[
-                "q_dot_c"
-            ].to_numpy(dtype=np.float64)
-            keep = ids != qs
-            yield pd.DataFrame(
-                {"query_id": qs[keep], "neighbor_id": ids[keep], "approx_sim": approx[keep]}
-            )
-
-    scored = cand.mapInPandas(adc, schema="query_id long, neighbor_id long, approx_sim double")
-    w = Window.partitionBy("query_id").orderBy(F.desc("approx_sim"), F.col("neighbor_id"))
-    shortlist = (
-        scored.withColumn("r", F.row_number().over(w)).filter(F.col("r") <= RERANK).drop("r")
-    )
-    qidx = {int(q): i for i, q in enumerate(q_ids)}
-    full = shortlist.join(e.select("vec_id", "embedding"), shortlist.neighbor_id == F.col("vec_id"))
-
-    def exact(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.array(list(pdf["embedding"]), dtype=np.float64)
-            _, units = _unit_rows(np.arange(len(mat)), mat)
-            qrows = q_units[[qidx[int(q)] for q in pdf["query_id"]]]
-            sims = np.einsum("ij,ij->i", qrows, units)
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].to_numpy(dtype=np.int64),
-                    "neighbor_id": pdf["neighbor_id"].to_numpy(dtype=np.int64),
-                    "sim": sims,
-                }
-            )
-
-    reranked = full.select("query_id", "neighbor_id", "embedding").mapInPandas(
-        exact, schema="query_id long, neighbor_id long, sim double"
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.col("neighbor_id"))
-    return (
-        reranked.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", F.round("sim", 6).alias("sim"))
-        .orderBy("query_id", "rank")
-    )

@@ -562,33 +562,6 @@ def minhash_signatures(sh: DataFrame, k: int = MINHASH_K) -> DataFrame:
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_signatures_arr(sharr: DataFrame, k: int = MINHASH_K) -> DataFrame:
-    """Shuffle-free MinHash signatures from a shingle *array* column.
-
-    Each of the k minima is an ``array_min(transform(...))`` over the
-    per-document shingle array — zero exchanges. Equivalent to
-    ``minhash_signatures`` (same xxhash64(seed, shingle) stream,
-    asserted in tests). Trade-off, measured at sf0.1: higher-order
-    functions are NOT whole-stage-codegen'd (the k transforms run on
-    the interpreted expression path, ~4× slower CPU than the codegen'd
-    explode+groupBy form), while the groupBy form's shuffle is tiny
-    anyway (map-side partial agg collapses to k longs per doc before
-    the exchange). ``minhash_signatures`` is therefore the default
-    path; this form exists for pipelines that must stay single-stage
-    (e.g. signature columns appended inside a larger narrow projection).
-    """
-    def hasher(seed: int):
-        # single-parameter lambda: a two-parameter lambda would be
-        # interpreted by Spark's HOF binder as (element, index)
-        return lambda s: F.xxhash64(F.lit(seed), s)
-
-    cols = [
-        F.array_min(F.transform(F.col("shingles"), hasher(i))).alias(f"mh{i}")
-        for i in range(k)
-    ]
-    return sharr.filter(F.size("shingles") > 0).select("doc_id", *cols)
-
-
 def lsh_candidate_pairs(sig: DataFrame, bands: int = LSH_BANDS, rows: int = LSH_ROWS) -> DataFrame:
     """Band the signature and self-join per (band, band_hash) bucket.
 
@@ -741,46 +714,6 @@ def simhash_signatures(
         ),
     )
     return sig.select("doc_id", "simhash")
-
-
-def simhash_neardup_pairs(sig: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """Pairs within Hamming distance ``max_hamming`` via 16-bit banding.
-
-    Pigeonhole: d ≤ 3 bit flips cannot touch all 4 of the 16-bit bands,
-    so every qualifying pair collides on ≥1 band — full recall without
-    an all-pairs join.
-    """
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftright(F.col("simhash"), b * 16).bitwiseAND(F.lit(0xFFFF)).alias("bits"),
-            )
-            for b in range(4)
-        ]
-    )
-    bb, keep_bb = explode_computed(bands, "bb")
-    buckets = (
-        sig.select("doc_id", "simhash", bb)
-        .filter(keep_bb)
-        .select("doc_id", "simhash", F.col("bb.band").alias("band"), F.col("bb.bits").alias("bits"))
-    )
-    a, b = buckets.alias("a"), buckets.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bits") == F.col("b.bits"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
 
 
 @query(

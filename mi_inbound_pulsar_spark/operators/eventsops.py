@@ -486,12 +486,10 @@ def q_ewma_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     in DuckDB as ``list_reduce``, so the float math is
     order-deterministic and engine-portable (same IEEE op sequence).
 
-    This is the backfill twin of ``streaming/ewma.py``'s
-    applyInPandasWithState operator (state = one double per key).
     Scale note: the batch fold materializes each key's series in one
     task — inherent to the sequential recurrence; for unbounded
-    history run the streaming form, which carries the accumulator
-    instead of the series.
+    history a streaming form would carry the accumulator (one double
+    per key, e.g. in ``applyInPandasWithState``) instead of the series.
     """
     e = load_table(spark, sf_dir, "events")
     seq = F.array_sort(
@@ -1215,8 +1213,8 @@ def q_holt_linear_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: same shape as the EWMA fold — each key's series
     materializes in one task (inherent to a sequential recurrence; for
-    unbounded history carry (level, trend) in the streaming state
-    instead, exactly like streaming/ewma.py carries its one double).
+    unbounded history carry (level, trend) in streaming state
+    instead, as the EWMA's streaming form would carry its one double).
     """
     e = load_table(spark, sf_dir, "events")
     seq = F.array_sort(

@@ -1,19 +1,2 @@
-"""Plan-inspection helpers (pushdown/broadcast assertions for tests)."""
-
-from __future__ import annotations
-
-from pyspark.sql import DataFrame
-
-
-def physical_plan(df: DataFrame) -> str:
-    """Formatted physical plan as a string (for assertions)."""
-    return df._jdf.queryExecution().explainString(  # noqa: SLF001
-        df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")  # noqa: SLF001
-    )
-
-
-def assert_in_plan(df: DataFrame, *needles: str) -> None:
-    plan = physical_plan(df)
-    missing = [n for n in needles if n not in plan]
-    if missing:
-        raise AssertionError(f"plan missing {missing}:\n{plan}")
+"""Physical-plan scale patterns: adaptive execution, bucketing,
+iterative checkpoints, layout, ranking and skew handling."""

@@ -14,12 +14,13 @@ Reference semantics being re-expressed (SURVEY.md §2A):
   ``foreachBatch`` returns — the same at-least-once contract as
   ack-after-process (:203-227).
 - K5/K6/K7 — nack/redelivery/DLQ: Pulsar nacks per *record*;
-  micro-batch replay is per *batch*. The finer-grained equivalent is a
-  retry table keyed by message_id carrying ``redelivery_count`` and
-  ``last_attempt``: failures are appended, re-unioned into the next
-  batch after ``nack_delay`` (K5), forced out after ``ack_timeout``
-  (K6), and routed to the DLQ sink once ``redelivery_count`` exceeds
-  the policy max (K7, default 5 per PulsarMessageConsumer.java:296-298).
+  micro-batch replay is per *batch*. The finer-grained equivalent
+  (:class:`KeyedRetryPipeline`) is a retry table keyed by message_id
+  carrying the redelivery count and last attempt: failures are
+  appended, re-unioned into the next batch after ``nack_delay`` (K5),
+  forced out after ``ack_timeout`` (K6), and routed to the DLQ sink
+  once the count reaches the policy max (K7, default 5 per
+  PulsarMessageConsumer.java:296-298).
 
 Scale: the retry table is partitioned by message_id hash and is
 idempotent (last-write-wins upsert per message_id), so batch replays
@@ -103,192 +104,16 @@ def run_pipeline(
     return writer.start()
 
 
-class RetryingPipeline:
-    """K5/K6/K7 integrated — per-*record* nack/redelivery/DLQ semantics
-    on top of micro-batch processing (SURVEY.md §7 hard part 1).
-
-    ``process`` receives each batch (original rows ∪ due redeliveries,
-    with ``redelivery_count`` reflecting the retry state) and returns
-    the message_ids that FAILED. Successes are acked (state cleared);
-    failures are nacked (count bumped, row parked for redelivery after
-    ``nack_delay_ms``); records exceeding ``policy.max_redeliveries``
-    are routed to the DLQ sink instead of being retried — the
-    reference's broker-side contract (PulsarMessageConsumer.java:203-227,
-    295-304) rebuilt engine-side.
-
-    State here is in-memory (driver) keyed by message_id — the
-    unit-test tier. The cluster-scale form is :class:`KeyedRetryPipeline`
-    below: the same semantics over a hash-partitioned, last-write-wins
-    parquet state table, with no driver collect of the data batch.
-    """
-
-    def __init__(
-        self,
-        process: Callable[[list], list[str]],
-        policy: DeadLetterPolicy,
-        nack_delay_ms: int = 0,
-        on_dead_letter: Callable[[list], None] | None = None,
-    ):
-        self.process = process
-        self.table = RetryTable(policy, nack_delay_ms=nack_delay_ms)
-        self.on_dead_letter = on_dead_letter or (lambda rows: None)
-        self._parked: dict[str, object] = {}  # message_id -> Row awaiting redelivery
-        self._dead: list = []
-
-    def __call__(self, batch_df: DataFrame, epoch_id: int, now: float | None = None) -> None:
-        now = time.time() if now is None else now
-        due = self.table.due_for_redelivery(now=now)
-        redelivered = []
-        for mid in due:
-            row = self._parked.get(mid)
-            if row is not None:
-                d = row.asDict()
-                d["redelivery_count"] = self.table.redelivery_count(mid)
-                redelivered.append(d)
-        fresh = batch_df.collect() if hasattr(batch_df, "collect") else list(batch_df)
-        rows = fresh + [_DictRow(d) for d in redelivered]
-        if not rows:
-            return
-        failed = set(self.process(rows))
-        ok_ids = [r["message_id"] for r in rows if r["message_id"] not in failed]
-        self.table.ack(ok_ids)
-        for mid in ok_ids:
-            self._parked.pop(mid, None)
-        self.table.nack(sorted(failed), now=now)
-        for r in rows:
-            mid = r["message_id"]
-            if mid in failed:
-                self._parked[mid] = r
-        # K7: exhausted records leave the retry loop for the DLQ; acking
-        # them afterwards drops them from the retry state so dead-letter
-        # bookkeeping stays bounded over the query lifetime
-        dead_now = [m for m in self.table.dead_letters() if m in self._parked]
-        if dead_now:
-            dead_rows = [self._parked.pop(m) for m in dead_now]
-            self._dead.extend(dead_rows)
-            self.on_dead_letter(dead_rows)
-            self.table.ack(dead_now)
-
-    @property
-    def dead_letters(self) -> list:
-        return list(self._dead)
-
-    def pending_ids(self) -> list[str]:
-        return sorted(self._parked)
-
-
-class _DictRow(dict):
-    """Row-alike over a dict (supports r['col'] and .asDict())."""
-
-    def asDict(self):  # noqa: N802 - Row API parity
-        return dict(self)
-
-
-class RetryTable:
-    """K5/K6/K7 — per-record nack/redelivery state on top of micro-batch
-    replay.
-
-    In-memory dict keyed by message_id for local use; the keyed
-    parquet-table equivalent at cluster scale is
-    :class:`KeyedRetryPipeline` (per-message-id state,
-    hash-partitioned, last-write-wins).
-    """
-
-    def __init__(
-        self,
-        policy: DeadLetterPolicy,
-        nack_delay_ms: int = 0,
-        ack_timeout_ms: int | None = None,
-        backoff_multiplier: float = 1.0,
-        max_delay_ms: int | None = None,
-    ):
-        self.policy = policy
-        self.nack_delay_ms = nack_delay_ms
-        self.ack_timeout_ms = ack_timeout_ms
-        # Pulsar's NegativeAckRedeliveryExponentialBackoff: attempt n
-        # waits nack_delay * multiplier^(n-1), capped at max_delay.
-        # multiplier=1.0 (default) keeps the reference's fixed delay.
-        self.backoff_multiplier = backoff_multiplier
-        self.max_delay_ms = max_delay_ms
-        self._state: dict[str, tuple[int, float]] = {}  # id -> (redeliveries, last_attempt)
-        self._delivered: dict[str, float] = {}  # id -> delivery time, awaiting ack/nack (K6)
-
-    def _delay_s(self, redeliveries: int) -> float:
-        delay_ms = self.nack_delay_ms * (self.backoff_multiplier ** max(redeliveries - 1, 0))
-        if self.max_delay_ms is not None:
-            delay_ms = min(delay_ms, self.max_delay_ms)
-        return delay_ms / 1000.0
-
-    def deliver(self, message_ids: list[str], now: float | None = None) -> None:
-        """K6 — stamp delivery time. A delivered id that is neither
-        acked nor nacked is forced back out once ``ack_timeout_ms``
-        elapses (no-op when no ack timeout is configured)."""
-        if self.ack_timeout_ms is None:
-            return
-        now = time.time() if now is None else now
-        for mid in message_ids:
-            self._delivered[mid] = now
-
-    def _expire_unacked(self, now: float) -> None:
-        """K6 — an expired delivery counts as a redelivery trigger, due
-        immediately (Pulsar ackTimeout redelivery is not delayed)."""
-        if self.ack_timeout_ms is None:
-            return
-        timeout_s = self.ack_timeout_ms / 1000.0
-        for mid, t0 in list(self._delivered.items()):
-            if now - t0 >= timeout_s:
-                del self._delivered[mid]
-                count, _ = self._state.get(mid, (0, 0.0))
-                self._state[mid] = (count + 1, now - self._delay_s(count + 1))
-
-    def nack(self, message_ids: list[str], now: float | None = None) -> None:
-        """K5 — negative-acknowledge: bump redelivery count, stamp time."""
-        now = time.time() if now is None else now
-        for mid in message_ids:
-            self._delivered.pop(mid, None)
-            count, _ = self._state.get(mid, (0, 0.0))
-            self._state[mid] = (count + 1, now)
-
-    def ack(self, message_ids: list[str]) -> None:
-        """K4 — acknowledged records leave the retry state."""
-        for mid in message_ids:
-            self._state.pop(mid, None)
-            self._delivered.pop(mid, None)
-
-    def due_for_redelivery(self, now: float | None = None) -> list[str]:
-        """K5/K6 — ids whose nack delay or ack timeout has elapsed and
-        that are still under the DLQ threshold."""
-        now = time.time() if now is None else now
-        self._expire_unacked(now)
-        due = []
-        for mid, (count, last) in self._state.items():
-            if count >= self.policy.max_redeliveries:
-                continue
-            if now - last >= self._delay_s(count):
-                due.append(mid)
-        return due
-
-    def dead_letters(self) -> list[str]:
-        """K7 — ids that exhausted max_redeliveries."""
-        return [
-            mid
-            for mid, (count, _) in self._state.items()
-            if count >= self.policy.max_redeliveries
-        ]
-
-    def redelivery_count(self, message_id: str) -> int:
-        return self._state.get(message_id, (0, 0.0))[0]
-
-
 class KeyedRetryPipeline:
     """K5/K6/K7 at cluster scale — per-record nack/redelivery/DLQ state
     in a hash-partitioned, epoch-versioned parquet table. The data batch
     is NEVER collected to the driver; every step is a DataFrame plan.
 
-    This is the keyed-table form the ``RetryTable`` docstring promises
-    (the in-memory twin remains for unit-level semantics). Reference
-    contract: PulsarMessageConsumer.java:203-227 (ack after process),
-    :295-304 (DLQ after max redeliveries).
+    This is the package's only K5/K6/K7 implementation; the pure-Python
+    model in ``tests/retry_model.py`` replays the same contract and
+    ``tests/test_retry_differential.py`` checks the two epoch by epoch.
+    Reference contract: PulsarMessageConsumer.java:203-227 (ack after
+    process), :295-304 (DLQ after max redeliveries).
 
     State layout (:mod:`.epochstore` owns the protocol): the snapshot
     ``state_dir/v<epoch>/`` and the DLQ delta ``dlq_dir/v<epoch>/``,
@@ -307,10 +132,13 @@ class KeyedRetryPipeline:
     MISSING from the outcome frame are the K6 case: with
     ``ack_timeout_ms`` set they are parked and redelivered once the
     timeout elapses; without one they are treated as nacked immediately
-    (conservative at-least-once). Rows whose bumped count reaches
-    ``policy.max_redeliveries`` are routed to ``dlq_dir/v<epoch>/``
-    (same idempotent versioning) and dropped from state, keeping state
-    bounded.
+    (conservative at-least-once). Every parked row's count is bumped in
+    the epoch it is judged, and a row whose bumped count reaches
+    ``policy.max_redeliveries`` is routed to ``dlq_dir/v<epoch>/`` (same
+    idempotent versioning) and dropped from state, keeping state
+    bounded. That holds for an unanswered row as for a nack: it is
+    dead-lettered in the epoch it goes unanswered, not when its ack
+    timeout would expire.
 
     Scale: each epoch judges its delivered rows in ONE pass — a single
     left join of the delivered rows with the outcome, whose matched

@@ -11,7 +11,6 @@ from mi_inbound_pulsar_spark.operators.dedup import (
     jaccard_pairs,
     minhash_neardup,
     shingles,
-    simhash_neardup_pairs,
     simhash_signatures,
 )
 from mi_inbound_pulsar_spark.sources.tables import load_table
@@ -37,21 +36,6 @@ def test_simhash_deterministic_and_64bit(spark, sf_dir):
     b = {r["doc_id"]: r["simhash"] for r in simhash_signatures(docs).collect()}
     assert a == b  # xxhash64 is deterministic across runs
     assert all(isinstance(v, int) for v in a.values())
-
-
-def test_simhash_banding_finds_identical_docs(spark):
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog again and again"),
-        (2, "the quick brown fox jumps over the lazy dog again and again"),  # dup
-        (3, "a completely different document about spark query engines"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    pairs = {
-        (r["doc_a"], r["doc_b"], r["hamming"])
-        for r in simhash_neardup_pairs(simhash_signatures(docs), max_hamming=3).collect()
-    }
-    assert (1, 2, 0) in pairs
-    assert all(p[:2] == (1, 2) for p in pairs)
 
 
 def test_ivf_recall_vs_brute_force(spark, sf_dir):

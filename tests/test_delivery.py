@@ -8,7 +8,8 @@ from pyspark.sql import functions as F
 
 from mi_inbound_pulsar_spark.config import DeadLetterPolicy
 from mi_inbound_pulsar_spark.sources.pulsar_source import simulated_message_frame
-from mi_inbound_pulsar_spark.streaming.delivery import PipelineRegistry, RetryTable, dlq_split
+from mi_inbound_pulsar_spark.streaming.delivery import PipelineRegistry, dlq_split
+from retry_model import RetryTable
 
 
 def test_dlq_split_threshold(spark, sf_dir):
@@ -61,7 +62,7 @@ def test_exponential_backoff_delays_grow_and_cap():
     # Pulsar NegativeAckRedeliveryExponentialBackoff semantics: attempt
     # n redelivers after delay*mult^(n-1), capped at max_delay
     from mi_inbound_pulsar_spark.config import DeadLetterPolicy
-    from mi_inbound_pulsar_spark.streaming.delivery import RetryTable
+    from retry_model import RetryTable
 
     t = RetryTable(
         DeadLetterPolicy(max_redeliveries=10, dlq_topic="dlq"),

@@ -9,8 +9,6 @@ passes the value tests but fails here.
 
 from __future__ import annotations
 
-import pytest
-
 
 def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
@@ -251,26 +249,6 @@ def test_shingle_explode_evaluates_gram_expression_once(spark, sf_dir):
     # the gram builder is the only CASE WHEN in this plan; the inferred
     # filter would duplicate it (2 copies in Filter + 1 in Project)
     assert plan.count("CASE WHEN") == 1, plan
-
-
-def test_minhash_array_signatures_match_groupby_signatures(spark, sf_dir):
-    """minhash_signatures_arr (narrow, interpreted-HOF) and
-    minhash_signatures (explode + codegen'd groupBy) must produce the
-    identical xxhash64(seed, shingle) minima — one is a drop-in for
-    the other."""
-    from mi_inbound_pulsar_spark.operators.dedup import (
-        minhash_signatures,
-        minhash_signatures_arr,
-        shingle_arrays,
-        shingles,
-    )
-    from mi_inbound_pulsar_spark.sources.tables import load_table
-
-    d = load_table(spark, sf_dir, "documents")
-    via_groupby = minhash_signatures(shingles(d), k=8)
-    via_arrays = minhash_signatures_arr(shingle_arrays(d), k=8)
-    assert via_groupby.exceptAll(via_arrays).count() == 0
-    assert via_arrays.exceptAll(via_groupby).count() == 0
 
 
 def test_topk_queries_push_rank_limit_below_the_window(spark, sf_dir):

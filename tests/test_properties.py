@@ -14,7 +14,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from mi_inbound_pulsar_spark.config import DeadLetterPolicy
-from mi_inbound_pulsar_spark.streaming.delivery import RetryTable
+from retry_model import RetryTable
 
 ids = st.lists(st.text(min_size=1, max_size=8), min_size=1, max_size=20, unique=True)
 
