@@ -55,15 +55,18 @@ from pathlib import Path
 #: round — a real speedup/slowdown in a probe biases the factor
 #: (median limits the damage, but keep the set frozen).
 #:
-#: Freshness is now ENFORCED, not aspirational (round-12 verdict item
+#: Freshness is ENFORCED for function sources (round-12 verdict item
 #: #5: two round-12-changed queries sat in this set and skewed the
 #: factor): ``PROBE_FREEZE.json`` pins the sha256 of every probe's
 #: TRANSITIVE source closure (the query function plus every repo-local
-#: helper it reaches — ``probe_source_digest``), and
-#: ``tests/test_bench_gate.py`` fails when any probe's closure drifts
-#: from the freeze. Changing a probe's kernel therefore forces a
-#: deliberate probe swap + freeze regeneration
-#: (``python tools/gen_probe_freeze.py``) in the same commit.
+#: function or class it reaches by bare name or by ``from ... import``
+#: — ``probe_source_digest``), and ``tests/test_bench_gate.py`` fails
+#: when any probe's closure drifts from the freeze. Changing a probe's
+#: kernel therefore forces a deliberate probe swap + freeze
+#: regeneration (``python tools/gen_probe_freeze.py``) in the same
+#: commit. NOT covered: the VALUES of module-level constants a probe
+#: reads, and helpers reached through an attribute (``module.fn``) —
+#: a change to either must be checked for probe reach by hand.
 #: Round-13 rotation under that rule: ``q_triangle_count`` (round-12
 #: dedup-pin blast radius; measured 5.7x its committed min while the
 #: median probe sat at 1.76x this session) and
@@ -71,6 +74,12 @@ from pathlib import Path
 #: replaced by ``q_gwet_ac1`` (agreement window shape, frozen since
 #: round 11) and ``q_kmv_distinct_sketch`` (portable-sketch explode
 #: shape, frozen since round 9).
+#: Exact-cosine kernel rotation: ``q_cosine_topk`` (its
+#: ``brute_force_topk`` / ``_unit_rows`` closure now runs the shared
+#: top-k selector) is replaced by ``q_multimodal_frame_sample``
+#: (mapInPandas executor-Python shape like the retrieval probe it
+#: replaces, closure unchanged since round 9, committed sf0.1 min
+#: 0.45 s).
 PROBES = (
     "q05_regional_revenue",
     "q09_product_profit",
@@ -80,7 +89,7 @@ PROBES = (
     "q_funnel_stages",
     "q_scd2_dimension",
     "q_kmv_distinct_sketch",
-    "q_cosine_topk",
+    "q_multimodal_frame_sample",
     "q_simhash_signatures",
 )
 

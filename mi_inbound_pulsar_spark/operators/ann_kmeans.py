@@ -18,9 +18,9 @@ Scale design (the 100 TB shape):
   to Spark's own map-side combine.
 - On a real cluster you train on a sampled corpus (``sample_frac``)
   — sampling is a narrow op too.
-- Serving reuses :func:`similarity.ivf_assign_cells` /the probe join,
-  so the serving plan is byte-for-byte the oracle-checked one; only
-  the centroid matrix differs.
+- Serving IS :func:`similarity.ivf_flat_topk`, the plan the
+  oracle-checked ``q_ann_ivf_topk`` runs; only the centroid matrix
+  differs.
 """
 
 from __future__ import annotations
@@ -29,18 +29,15 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mi_inbound_pulsar_spark.operators import query
 from mi_inbound_pulsar_spark.operators.similarity import (
-    N_PROBE,
     N_QUERIES,
-    SCORE_SCHEMA,
-    TOP_K,
     _collect_matrix,
     _unit_rows,
-    ivf_assign_cells,
+    ivf_flat_topk,
 )
 from mi_inbound_pulsar_spark.sources.tables import load_table
 
@@ -65,10 +62,10 @@ def train_spherical_kmeans(
     if sample_frac is not None:
         vecs = vecs.sample(fraction=sample_frac, seed=7)
 
-    init_ids, init_mat = _collect_matrix(
+    _, init_mat = _collect_matrix(
         vecs.orderBy("vec_id").limit(k), "vec_id", "embedding"
     )
-    _, centroids = _unit_rows(init_ids, init_mat)
+    centroids = _unit_rows(init_mat)
     sc = corpus.sparkSession.sparkContext
 
     partial_schema = "cell long, cnt long, vec_sum array<double>"
@@ -82,10 +79,7 @@ def train_spherical_kmeans(
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                mat = np.array(list(pdf["embedding"]), dtype=np.float64)
-                norms = np.linalg.norm(mat, axis=1, keepdims=True)
-                norms[norms == 0.0] = 1.0
-                units = mat / norms
+                units = _unit_rows(np.array(list(pdf["embedding"]), dtype=np.float64))
                 best = np.argmax(units @ cents.T, axis=1)
                 acc_cnt += np.bincount(best, minlength=len(cents))
                 np.add.at(acc_sum, best, units)
@@ -118,9 +112,7 @@ def train_spherical_kmeans(
         moved = new_cnt > 0
         next_c = centroids.copy()
         next_c[moved] = new_sum[moved]  # empty cells keep their old centroid
-        norms = np.linalg.norm(next_c, axis=1, keepdims=True)
-        norms[norms == 0.0] = 1.0
-        centroids = next_c / norms
+        centroids = _unit_rows(next_c)
     return centroids
 
 
@@ -139,47 +131,7 @@ def q_ann_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load_table(spark, sf_dir, "embeddings")
     centroids = train_spherical_kmeans(e)
-    cent_ids = np.arange(len(centroids), dtype=np.int64)
-
-    assigned = ivf_assign_cells(e, cent_ids, centroids)
-
-    q_ids, q_mat = _collect_matrix(
-        e.filter(F.col("vec_id") < N_QUERIES), "vec_id", "embedding"
-    )
-    q_ids, q_units = _unit_rows(q_ids, q_mat)
-    probe_sims = q_units @ centroids.T
-    probe_rows = [
-        (int(q_ids[qi]), int(cent_ids[ci]))
-        for qi in range(len(q_ids))
-        for ci in np.lexsort((cent_ids, -probe_sims[qi]))[:N_PROBE]
-    ]
-    probes = F.broadcast(spark.createDataFrame(probe_rows, "query_id long, cell long"))
-    candidates = assigned.join(probes, "cell").select("query_id", "vec_id", "embedding")
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qidx = {int(q): i for i, q in enumerate(q_ids)}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            c_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            c_mat = np.array(list(pdf["embedding"]), dtype=np.float64)
-            _, c_units = _unit_rows(c_ids, c_mat)
-            qs = pdf["query_id"].to_numpy(dtype=np.int64)
-            qrows = q_units[[qidx[int(q)] for q in qs]]
-            sims = np.einsum("ij,ij->i", qrows, c_units)
-            keep = c_ids != qs
-            yield pd.DataFrame(
-                {"query_id": qs[keep], "neighbor_id": c_ids[keep], "sim": sims[keep]}
-            )
-
-    scored = candidates.mapInPandas(score, schema=SCORE_SCHEMA)
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", F.round("sim", 6).alias("sim"))
-        .orderBy("query_id", "rank")
-    )
+    return ivf_flat_topk(e, np.arange(len(centroids), dtype=np.int64), centroids)
 
 
 @query(

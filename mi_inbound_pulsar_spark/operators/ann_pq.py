@@ -62,8 +62,8 @@ def train_pq_codebooks(
     ``train_spherical_kmeans``, but all m subspaces ride one pass).
     """
     vecs = corpus.select("vec_id", "embedding")
-    init_ids, init_mat = _collect_matrix(vecs.orderBy("vec_id").limit(ksub), "vec_id", "embedding")
-    _, init_units = _unit_rows(init_ids, init_mat)
+    _, init_mat = _collect_matrix(vecs.orderBy("vec_id").limit(ksub), "vec_id", "embedding")
+    init_units = _unit_rows(init_mat)
     dim = init_units.shape[1]
     dsub = dim // m
     books = np.stack([init_units[:, j * dsub : (j + 1) * dsub] for j in range(m)])
@@ -82,7 +82,7 @@ def train_pq_codebooks(
                 if len(pdf) == 0:
                     continue
                 mat = np.array(list(pdf["embedding"]), dtype=np.float64)
-                _, units = _unit_rows(np.arange(len(mat)), mat)
+                units = _unit_rows(mat)
                 for j in range(m_):
                     sub = units[:, j * d_ : (j + 1) * d_]
                     # L2 argmin == argmax(<x,c> - ||c||²/2)
@@ -132,7 +132,7 @@ def pq_encode(corpus: DataFrame, books: np.ndarray) -> DataFrame:
                 continue
             ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             mat = np.array(list(pdf["embedding"]), dtype=np.float64)
-            _, units = _unit_rows(np.arange(len(mat)), mat)
+            units = _unit_rows(mat)
             codes = np.empty((len(mat), m_), dtype=np.int64)
             for j in range(m_):
                 sub = units[:, j * d_ : (j + 1) * d_]
@@ -153,7 +153,7 @@ def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes = pq_encode(e, books)
 
     q_ids, q_mat = _collect_matrix(e.filter(F.col("vec_id") < N_QUERIES), "vec_id", "embedding")
-    q_ids, q_units = _unit_rows(q_ids, q_mat)
+    q_units = _unit_rows(q_mat)
     m_, k_, d_ = books.shape
     # per-query LUT: <q_j, c_jk> for every subspace j, codeword k
     lut = np.stack(
@@ -195,7 +195,7 @@ def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             if len(pdf) == 0:
                 continue
             mat = np.array(list(pdf["embedding"]), dtype=np.float64)
-            _, units = _unit_rows(np.arange(len(mat)), mat)
+            units = _unit_rows(mat)
             qrows = q_units[[qidx[int(q)] for q in pdf["query_id"]]]
             sims = np.einsum("ij,ij->i", qrows, units)
             yield pd.DataFrame(
@@ -274,7 +274,7 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str, n_probe: int = IVFPQ_PROBE) -> 
     coded = assigned.select("vec_id", "cell").join(pq_encode(e, books), "vec_id")
 
     q_ids, q_mat = _collect_matrix(e.filter(F.col("vec_id") < N_QUERIES), "vec_id", "embedding")
-    q_ids, q_units = _unit_rows(q_ids, q_mat)
+    q_units = _unit_rows(q_mat)
     m_, k_, d_ = books.shape
     lut = np.stack(
         [[qu[j * d_ : (j + 1) * d_] @ books[j].T for j in range(m_)] for qu in q_units]
@@ -321,7 +321,7 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str, n_probe: int = IVFPQ_PROBE) -> 
             if len(pdf) == 0:
                 continue
             mat = np.array(list(pdf["embedding"]), dtype=np.float64)
-            _, units = _unit_rows(np.arange(len(mat)), mat)
+            units = _unit_rows(mat)
             qrows = q_units[[qidx[int(q)] for q in pdf["query_id"]]]
             sims = np.einsum("ij,ij->i", qrows, units)
             yield pd.DataFrame(

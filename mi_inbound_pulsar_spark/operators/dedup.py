@@ -769,16 +769,14 @@ def q_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-duplicate pairs: cosine ≥ 0.4, exact (brute force).
 
-    Execution: distributed block-nested-loop. The corpus is split into
-    ``B`` hash blocks on ``vec_id``; every block *pair* (i ≤ j) is
-    cogrouped and scored with one numpy float64 GEMM per pair. Nothing
-    is ever collected to the driver: replication is B rows-out per row
-    (n·B rows shuffled on a 2-int key), per-task memory is two blocks —
-    not the corpus — and the quadratic compute, inherent to exact
-    all-pairs, is spread evenly over B(B+1)/2 independent tasks.
-    Blocks are disjoint residue classes, so a cross-block pair appears
-    in exactly one group (no post-dedup); the diagonal group filters
-    id_a < id_b.
+    Execution: distributed block-nested-loop on the exact-cosine block
+    scaffold shared with ``knn_self_join`` (``similarity._block_pairs``):
+    every block *pair* is cogrouped and scored with one numpy float64
+    GEMM, nothing is collected to the driver, and per-task memory is two
+    blocks, not the corpus. This query supplies only the score — the
+    ``>= 0.4`` mask; blocks are disjoint residue classes, so a
+    cross-block pair appears in exactly one group (no post-dedup) and
+    the diagonal group filters id_a < id_b.
 
     This is the oracle-checkable truth the sub-quadratic paths are
     gated against (``q_embedding_neardup_lsh`` — the 100 TB candidate
@@ -789,48 +787,18 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    B = 8  # ≈ sqrt(2·parallelism) wanted; B(B+1)/2 = 36 GEMM tasks
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    blk = e.withColumn("blk", F.pmod(F.col("vec_id"), F.lit(B)).cast("int"))
-    # two physically-distinct tiny frames: the same block_pairs object on
-    # both sides would trip Spark's ambiguous-self-join analyzer
-    pairs_rows = [(i, j) for i in range(B) for j in range(i, B)]
-    bp_l = spark.createDataFrame(pairs_rows, "bi int, bj int")
-    bp_r = spark.createDataFrame(pairs_rows, "bi int, bj int")
-    left = blk.join(F.broadcast(bp_l), blk.blk == bp_l.bi).select(
-        "bi", "bj", F.col("vec_id").alias("id_l"), F.col("embedding").alias("emb_l")
-    )
-    right = blk.join(F.broadcast(bp_r), blk.blk == bp_r.bj).select(
-        "bi", "bj", F.col("vec_id").alias("id_r"), F.col("embedding").alias("emb_r")
-    )
+    from mi_inbound_pulsar_spark.operators.similarity import _block_pairs
 
-    def score(key, lpdf, rpdf):
-        bi, bj = key
-        if len(lpdf) == 0 or len(rpdf) == 0:
-            return pd.DataFrame(
-                {"id_a": np.array([], np.int64), "id_b": np.array([], np.int64)}
-            )
-        ids_l = lpdf["id_l"].to_numpy(dtype=np.int64)
-        ids_r = rpdf["id_r"].to_numpy(dtype=np.int64)
-        ml = np.array(list(lpdf["emb_l"]), dtype=np.float64)
-        mr = np.array(list(rpdf["emb_r"]), dtype=np.float64)
-        for m in (ml, mr):
-            n = np.linalg.norm(m, axis=1, keepdims=True)
-            n[n == 0.0] = 1.0
-            m /= n
-        mask = (ml @ mr.T) >= 0.4
-        if bi == bj:
+    def score(diagonal, ids_l, ids_r, S):
+        mask = S >= 0.4
+        if diagonal:
             mask &= ids_l[:, None] < ids_r[None, :]
         li, ri = np.nonzero(mask)
         a, b = ids_l[li], ids_r[ri]
         return pd.DataFrame({"id_a": np.minimum(a, b), "id_b": np.maximum(a, b)})
 
-    return (
-        left.groupBy("bi", "bj")
-        .cogroup(right.groupBy("bi", "bj"))
-        .applyInPandas(score, schema="id_a long, id_b long")
-        .orderBy("id_a", "id_b")
-    )
+    e = load_table(spark, sf_dir, "embeddings")
+    return _block_pairs(e, score, "id_a long, id_b long").orderBy("id_a", "id_b")
 
 
 # --------------------------------------------------------------------------
@@ -963,6 +931,8 @@ def q_embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
+    from mi_inbound_pulsar_spark.operators.similarity import _unit_rows
+
     e = load_table(spark, sf_dir, "embeddings")
     # the embedding rides WITH its band keys into the bucket shuffle, so
     # verification happens per-bucket as one numpy GEMM — there is no
@@ -975,10 +945,7 @@ def q_embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def bucket_verify(pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        mat = np.array(list(pdf["embedding"]), dtype=np.float64)
-        n = np.linalg.norm(mat, axis=1, keepdims=True)
-        n[n == 0.0] = 1.0
-        units = mat / n
+        units = _unit_rows(np.array(list(pdf["embedding"]), dtype=np.float64))
         out_a, out_b = [], []
         # chunk the GEMM so a hot bucket stays bounded in memory
         for lo in range(0, len(ids), 1024):

@@ -15,6 +15,16 @@ Execution design (the 100 TB shape):
   numpy), so the only shuffle in the whole plan carries
   ≤ n_partitions × n_queries × k candidate rows into the final
   row_number merge — the TakeOrdered-per-group pattern.
+- Exact cosine is three shared pieces, one per computational shape:
+  ``_unit_rows`` (the package's only L2 normalize),
+  ``_topk_candidates`` (the only partial top-k selector: one int64
+  composite key on (6dp-rounded sim DESC, id ASC), self-pairs
+  excluded, ids guarded to [0, 2^33)) and ``_block_pairs`` (the only
+  block-pair cogroup GEMM scaffold for corpus self-joins).
+  ``brute_force_topk`` runs the selector per Arrow batch,
+  ``knn_self_join`` per block pair and direction, and
+  ``dedup.q_embedding_neardup`` gives the scaffold a threshold mask;
+  each keeps its own final merge.
 - ``q_ann_ivf_topk`` is the sub-linear path: coarse-quantize the
   corpus to centroid cells, probe only the ``nprobe`` nearest cells
   per query. At 100 TB the assignment output is written bucketed by
@@ -22,7 +32,7 @@ Execution design (the 100 TB shape):
 
 Reference parity: the reference (a Pulsar ingestion connector) has no
 similarity operators — this module is the north-star extension named
-in /root/repo/BASELINE.json; semantics are fixed by the DuckDB oracles
+in BASELINE.json; semantics are fixed by the DuckDB oracles
 (``list_cosine_similarity``).
 """
 
@@ -49,11 +59,11 @@ N_PROBE = 4
 SCORE_SCHEMA = "query_id long, neighbor_id long, sim double"
 
 
-def _unit_rows(ids: np.ndarray, mat: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+def _unit_rows(mat: np.ndarray) -> np.ndarray:
     """L2-normalize rows (float64); zero rows stay zero."""
     norms = np.linalg.norm(mat, axis=1, keepdims=True)
     norms[norms == 0.0] = 1.0
-    return ids, mat / norms
+    return mat / norms
 
 
 def _collect_matrix(df: DataFrame, id_col: str, vec_col: str) -> tuple[np.ndarray, np.ndarray]:
@@ -69,36 +79,49 @@ def _collect_matrix(df: DataFrame, id_col: str, vec_col: str) -> tuple[np.ndarra
     return ids, mat
 
 
-def topk_partial_scorer(q_ids: np.ndarray, q_units: np.ndarray, k: int):
-    """Build a mapInPandas fn emitting per-batch top-k candidates per query."""
+# The (6dp-rounded sim DESC, neighbor_id ASC) order packs into ONE int64
+# composite key: the rounded sim is an exact integer in [-1e6, 1e6] after
+# ×1e6, so (1_000_001 - sim_int) * 2^33 + neighbor_id is order-isomorphic
+# to the lexicographic rank for ids in [0, 2^33). Self-pairs get a
+# sentinel strictly above every real key (max real key < 2e6 * 2^33 +
+# 2^33 < 2^55).
+_ID_LIMIT = np.int64(1) << 33
+_SELF_PAIR = np.int64(1) << 62
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            c_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            c_mat = np.array(list(pdf["embedding"]), dtype=np.float64)
-            _, c_units = _unit_rows(c_ids, c_mat)
-            sims = q_units @ c_units.T  # (n_queries, batch)
-            out_q, out_c, out_s = [], [], []
-            for qi in range(len(q_ids)):
-                row = sims[qi]
-                mask = c_ids != q_ids[qi]
-                cand_idx = np.nonzero(mask)[0]
-                if len(cand_idx) == 0:
-                    continue
-                take = min(k, len(cand_idx))
-                # partial top-k inside the partition; ties resolved later
-                # by the global row_number (sim desc, neighbor_id asc)
-                part = cand_idx[np.argsort(-row[cand_idx], kind="stable")[: take + 8]]
-                out_q.extend([q_ids[qi]] * len(part))
-                out_c.extend(c_ids[part])
-                out_s.extend(row[part])
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_c, "sim": out_s}
-            ).astype({"query_id": "int64", "neighbor_id": "int64", "sim": "float64"})
 
-    return run
+def _topk_candidates(
+    S: np.ndarray, q_ids: np.ndarray, c_ids: np.ndarray, take: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Per-row partial top-``take`` of a (queries × candidates) cosine
+    block, self-pairs excluded: ``(query_id, neighbor_id, sim)`` arrays.
+
+    One composite key + ``argpartition`` for the whole block, with no
+    loop per query row. This is only a candidate filter: callers keep a
+    tie margin above k and rank exactly in their own row_number merge;
+    exact ties are cut on neighbor_id ASC here, as in every merge and
+    oracle.
+    """
+    # the packing is order-isomorphic ONLY for ids in [0, 2^33) — an id
+    # outside the domain would silently corrupt ranking across adjacent
+    # sim buckets, so fail loudly instead (the lexsort fallback for
+    # wider ids is a feature change; at the shipped id domains this
+    # never trips)
+    if len(c_ids) and (c_ids.min() < 0 or c_ids.max() >= _ID_LIMIT):
+        raise ValueError(
+            "vec_id outside [0, 2^33) — the int64 composite ranking key "
+            "cannot represent this id domain"
+        )
+    sr = np.rint(np.round(S, 6) * 1e6).astype(np.int64)
+    comp = (np.int64(1_000_001) - sr) * _ID_LIMIT + c_ids[None, :]
+    comp = np.where(c_ids[None, :] == q_ids[:, None], _SELF_PAIR, comp)
+    width = comp.shape[1]
+    if take < width:
+        part = np.argpartition(comp, take - 1, axis=1)[:, :take]
+    else:
+        part = np.broadcast_to(np.arange(width), comp.shape)
+    rows, j = np.nonzero(np.take_along_axis(comp, part, axis=1) < _SELF_PAIR)
+    cols = part[rows, j]
+    return q_ids[rows], c_ids[cols], S[rows, cols]
 
 
 def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = TOP_K) -> DataFrame:
@@ -108,10 +131,20 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = TOP_K) -> D
     queries: (vec_id, embedding) — small, collected + broadcast.
     """
     q_ids, q_mat = _collect_matrix(queries, "vec_id", "embedding")
-    q_ids, q_units = _unit_rows(q_ids, q_mat)
-    partial = corpus.select("vec_id", "embedding").mapInPandas(
-        topk_partial_scorer(q_ids, q_units, k), schema=SCORE_SCHEMA
-    )
+    q_units = _unit_rows(q_mat)
+
+    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            c_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+            c_units = _unit_rows(np.array(list(pdf["embedding"]), dtype=np.float64))
+            # per-batch candidates with a k + 8 tie margin; the global
+            # row_number below ranks them exactly
+            qs, cs, sims = _topk_candidates(q_units @ c_units.T, q_ids, c_ids, k + 8)
+            yield pd.DataFrame({"query_id": qs, "neighbor_id": cs, "sim": sims})
+
+    partial = corpus.select("vec_id", "embedding").mapInPandas(score, schema=SCORE_SCHEMA)
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.col("neighbor_id"))
     return (
         partial.withColumn("rank", F.row_number().over(w))
@@ -158,7 +191,7 @@ def ivf_assign_cells(corpus: DataFrame, cent_ids: np.ndarray, cent_units: np.nda
                 continue
             c_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             c_mat = np.array(list(pdf["embedding"]), dtype=np.float64)
-            _, c_units = _unit_rows(c_ids, c_mat)
+            c_units = _unit_rows(c_mat)
             sims = c_units @ cent_units.T  # (batch, n_cells)
             best = np.argmax(sims, axis=1)  # first max → lowest cell id
             yield pd.DataFrame(
@@ -171,6 +204,59 @@ def ivf_assign_cells(corpus: DataFrame, cent_ids: np.ndarray, cent_units: np.nda
 
     return corpus.select("vec_id", "embedding").mapInPandas(
         run, schema="vec_id long, cell long, embedding array<float>"
+    )
+
+
+def ivf_flat_topk(corpus: DataFrame, cent_ids: np.ndarray, cent_units: np.ndarray) -> DataFrame:
+    """IVF-Flat top-k of the first N_QUERIES vectors over the given
+    unit centroids: assign → probe the N_PROBE nearest cells → exact
+    rerank of the probed cells only. Shared by the stride-centroid
+    ``q_ann_ivf_topk`` and the k-means ``ann_kmeans.q_ann_kmeans_topk``,
+    so the trained index serves through the oracle-checked plan."""
+    assigned = ivf_assign_cells(corpus, cent_ids, cent_units)
+
+    # probe cells per query (query side is tiny → plain numpy on driver)
+    q_ids, q_mat = _collect_matrix(
+        corpus.filter(F.col("vec_id") < N_QUERIES), "vec_id", "embedding"
+    )
+    q_units = _unit_rows(q_mat)
+    probe_sims = q_units @ cent_units.T
+    probe_rows = [
+        (int(q_ids[qi]), int(cent_ids[ci]))
+        for qi in range(len(q_ids))
+        # stable sort on (-sim, cell) == ORDER BY sim DESC, cell
+        for ci in np.lexsort((cent_ids, -probe_sims[qi]))[:N_PROBE]
+    ]
+    probes = F.broadcast(
+        corpus.sparkSession.createDataFrame(probe_rows, "query_id long, cell long")
+    )
+
+    # scan only the probed cells; score candidates with the GEMM scorer
+    candidates = assigned.join(probes, "cell").select("query_id", "vec_id", "embedding")
+
+    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        qidx = {int(q): i for i, q in enumerate(q_ids)}
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            c_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+            c_mat = np.array(list(pdf["embedding"]), dtype=np.float64)
+            c_units = _unit_rows(c_mat)
+            qs = pdf["query_id"].to_numpy(dtype=np.int64)
+            qrows = q_units[[qidx[int(q)] for q in qs]]
+            sims = np.einsum("ij,ij->i", qrows, c_units)
+            keep = c_ids != qs
+            yield pd.DataFrame(
+                {"query_id": qs[keep], "neighbor_id": c_ids[keep], "sim": sims[keep]}
+            )
+
+    scored = candidates.mapInPandas(score, schema=SCORE_SCHEMA)
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.col("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= TOP_K)
+        .select("query_id", "neighbor_id", "rank", F.round("sim", 6).alias("sim"))
+        .orderBy("query_id", "rank")
     )
 
 
@@ -215,7 +301,7 @@ def ivf_assign_cells(corpus: DataFrame, cent_ids: np.ndarray, cent_units: np.nda
     """,
 )
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-Flat approximate top-5: probe the 3 nearest of the cells.
+    """IVF-Flat approximate top-5: probe the N_PROBE nearest cells.
 
     Deterministic centroids (every CENTROID_STRIDE-th vector) so the
     oracle replays the exact same index; recall vs brute force is
@@ -229,51 +315,9 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding"),
     )
     cent_ids, cent_mat = _collect_matrix(centroids, "cell", "embedding")
-    cent_ids, cent_units = _unit_rows(cent_ids, cent_mat)
+    cent_units = _unit_rows(cent_mat)
 
-    assigned = ivf_assign_cells(e, cent_ids, cent_units)
-
-    # probe cells per query (query side is tiny → plain numpy on driver)
-    q_ids, q_mat = _collect_matrix(
-        e.filter(F.col("vec_id") < N_QUERIES), "vec_id", "embedding"
-    )
-    q_ids, q_units = _unit_rows(q_ids, q_mat)
-    probe_sims = q_units @ cent_units.T
-    probe_rows = [
-        (int(q_ids[qi]), int(cent_ids[ci]))
-        for qi in range(len(q_ids))
-        # stable sort on (-sim, cell) == ORDER BY sim DESC, cell
-        for ci in np.lexsort((cent_ids, -probe_sims[qi]))[:N_PROBE]
-    ]
-    probes = F.broadcast(spark.createDataFrame(probe_rows, "query_id long, cell long"))
-
-    # scan only the probed cells; score candidates with the GEMM scorer
-    candidates = assigned.join(probes, "cell").select("query_id", "vec_id", "embedding")
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qidx = {int(q): i for i, q in enumerate(q_ids)}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            c_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            c_mat = np.array(list(pdf["embedding"]), dtype=np.float64)
-            _, c_units = _unit_rows(c_ids, c_mat)
-            qs = pdf["query_id"].to_numpy(dtype=np.int64)
-            qrows = q_units[[qidx[int(q)] for q in qs]]
-            sims = np.einsum("ij,ij->i", qrows, c_units)
-            keep = c_ids != qs
-            yield pd.DataFrame(
-                {"query_id": qs[keep], "neighbor_id": c_ids[keep], "sim": sims[keep]}
-            )
-
-    scored = candidates.mapInPandas(score, schema=SCORE_SCHEMA)
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", F.round("sim", 6).alias("sim"))
-        .orderBy("query_id", "rank")
-    )
+    return ivf_flat_topk(e, cent_ids, cent_units)
 
 
 # --------------------------------------------------------------------------
@@ -344,17 +388,14 @@ def q_nearest_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("label", F.transform("dm", lambda s: s.m).alias("cent")).collect()
     cent_rows.sort(key=lambda r: r["label"])
     c_labels = np.array([r["label"] for r in cent_rows], dtype=np.int64)
-    c_mat = np.array([r["cent"] for r in cent_rows], dtype=np.float64)
-    c_norm = np.linalg.norm(c_mat, axis=1, keepdims=True)
-    c_norm[c_norm == 0.0] = 1.0
-    c_units = c_mat / c_norm
+    c_units = _unit_rows(np.array([r["cent"] for r in cent_rows], dtype=np.float64))
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             mat = np.array(list(pdf["embedding"]), dtype=np.float64)
-            _, units = _unit_rows(np.empty(0), mat)
+            units = _unit_rows(mat)
             sims = np.round(units @ c_units.T, 4)  # (batch, k)
             best = np.argmax(sims, axis=1)  # first max -> lowest label
             yield pd.DataFrame(
@@ -615,23 +656,74 @@ def q_hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Mutual k-nearest-neighbor pairs (SemDeDup-style semantic dedup signal)
 # --------------------------------------------------------------------------
 MUTUAL_KNN_K = 5
-KNN_BLOCKS = 8
+KNN_BLOCKS = 8  # ≈ sqrt(2·parallelism); KNN_BLOCKS·(KNN_BLOCKS+1)/2 = 36 GEMM tasks
 
 
-def knn_self_join(e: DataFrame, k: int = MUTUAL_KNN_K, n_blocks: int = KNN_BLOCKS) -> DataFrame:
+def _block_pairs(e: DataFrame, score, schema: str) -> DataFrame:
+    """Exact all-pairs cosine scaffold: block-cogrouped GEMM.
+
+    Vectors split into B = ``KNN_BLOCKS`` disjoint residue classes
+    ``pmod(vec_id, B)``; every unordered block pair (bi ≤ bj) cogroups
+    once, so a cross-block pair lands in exactly one group. Nothing is
+    collected to the driver: replication is B rows-out per row (n·B
+    rows shuffled on a 2-int key), per-task
+    memory is two blocks, and the quadratic compute is spread over
+    B(B+1)/2 independent tasks. Per group, ``score(diagonal, ids_l,
+    ids_r, S)`` gets both sides' ids and the float64 cosine block
+    ``S = units_l @ units_r.T`` (``diagonal`` is bi == bj, where both
+    sides are the same block) and returns a frame of ``schema``.
+    """
+    spark = e.sparkSession
+    blk = e.select(
+        "vec_id", "embedding", F.pmod(F.col("vec_id"), F.lit(KNN_BLOCKS)).alias("blk")
+    )
+    pairs = [(i, j) for i in range(KNN_BLOCKS) for j in range(i, KNN_BLOCKS)]
+    sides = []
+    for col, side in (("bi", "l"), ("bj", "r")):
+        # a fresh tiny frame per side: the same pairs frame on both
+        # sides would trip Spark's ambiguous-self-join analyzer
+        bp = spark.createDataFrame(pairs, "bi long, bj long")
+        sides.append(
+            blk.join(F.broadcast(bp), blk.blk == bp[col]).select(
+                "bi", "bj", F.col("vec_id").alias(f"id_{side}"),
+                F.col("embedding").alias(f"emb_{side}"),
+            )
+        )
+
+    def run(key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
+        if len(lpdf) == 0 or len(rpdf) == 0:
+            return pd.DataFrame()  # Spark accepts a column-less empty result
+        ul = _unit_rows(np.array(list(lpdf["emb_l"]), dtype=np.float64))
+        ur = _unit_rows(np.array(list(rpdf["emb_r"]), dtype=np.float64))
+        return score(
+            key[0] == key[1],
+            lpdf["id_l"].to_numpy(dtype=np.int64),
+            rpdf["id_r"].to_numpy(dtype=np.int64),
+            ul @ ur.T,
+        )
+
+    left, right = sides
+    return (
+        left.groupBy("bi", "bj")
+        .cogroup(right.groupBy("bi", "bj"))
+        .applyInPandas(run, schema=schema)
+    )
+
+
+def knn_self_join(e: DataFrame, k: int = MUTUAL_KNN_K) -> DataFrame:
     """Exact cosine k-NN of every corpus vector against the whole
     corpus (self-join form), without ever collecting the corpus.
 
-    Block-cogrouped GEMM (the ``q_embedding_neardup`` kernel shape):
-    vectors hash into ``n_blocks`` blocks, each unordered block pair
-    (bi ≤ bj) cogroups once, one float64 GEMM scores it, and each side
-    keeps only a per-pair partial top-k — so the shuffle into the
-    global row_number merge carries O(n · pairs_per_block · k) candidate
-    rows, never n². Work is O(n²/B) per task — the exact-kNN lower
-    bound — and at 100 TB this operator is the *verifier* run after an
-    IVF/LSH candidate generator (q_ann_ivf_topk / rhp_band_keys) cuts
-    the candidate space; the block join is also exactly how the
-    verification stage parallelizes.
+    Runs on the :func:`_block_pairs` scaffold (shared with
+    ``q_embedding_neardup``): each block pair's GEMM is scored in both
+    directions (a diagonal pair covers both in one) and
+    :func:`_topk_candidates` keeps a per-pair partial top-(k + 8), so
+    the shuffle into the global row_number merge carries
+    O(n · pairs_per_block · k) candidate rows, never n². Work is
+    O(n²/B) per task — the exact-kNN lower bound — and at 100 TB this
+    operator is the *verifier* run after an IVF/LSH candidate generator
+    (q_ann_ivf_topk / rhp_band_keys) cuts the candidate space; the
+    block join is also exactly how the verification stage parallelizes.
 
     Ranking is on the 6dp-ROUNDED similarity with neighbor_id as the
     tie-break, applied identically in the per-block partial top-k, the
@@ -639,115 +731,19 @@ def knn_self_join(e: DataFrame, k: int = MUTUAL_KNN_K, n_blocks: int = KNN_BLOCK
     normalized-GEMM and DuckDB's list_cosine_similarity differ at ulp
     level, which can flip an unrounded rank at the k-th boundary (the
     q_retrieval_mrr hazard), and exact-duplicate embeddings tie exactly
-    at 6dp, so the tie-break must agree everywhere too.
+    at 6dp, so the tie-break must agree everywhere too. Ids must lie in
+    [0, 2^33) — the composite ranking key raises otherwise.
     """
-    import numpy as np
-    import pandas as pd
 
-    spark = e.sparkSession
-    blk = e.select("vec_id", "embedding", (F.col("vec_id") % n_blocks).alias("blk"))
-    block_pairs = [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)]
-    bp_l = spark.createDataFrame(block_pairs, "bi long, bj long")
-    bp_r = spark.createDataFrame(block_pairs, "bi long, bj long")
-    left = blk.join(F.broadcast(bp_l), blk.blk == bp_l.bi).select(
-        "bi", "bj", F.col("vec_id").alias("id_l"), F.col("embedding").alias("emb_l")
-    )
-    right = blk.join(F.broadcast(bp_r), blk.blk == bp_r.bj).select(
-        "bi", "bj", F.col("vec_id").alias("id_r"), F.col("embedding").alias("emb_r")
-    )
-    take = k + 8  # tie margin; global row_number resolves exactly
-    # ranking sentinel for self-pairs — strictly above every real
-    # composite key (max real key < 2e6 * 2^33 + 2^33 < 2^55)
-    _SENTINEL = np.int64(1) << 62
+    def score(diagonal, ids_l, ids_r, S):
+        directions = [(S, ids_l, ids_r)]
+        if not diagonal:
+            directions.append((S.T, ids_r, ids_l))
+        parts = [_topk_candidates(s, q, c, k + 8) for s, q, c in directions]
+        vec_id, neighbor_id, sim = (np.concatenate(a) for a in zip(*parts))
+        return pd.DataFrame({"vec_id": vec_id, "neighbor_id": neighbor_id, "sim": sim})
 
-    def score(key, lpdf, rpdf):
-        bi, bj = key
-        empty = pd.DataFrame(
-            {
-                "vec_id": np.array([], np.int64),
-                "neighbor_id": np.array([], np.int64),
-                "sim": np.array([], np.float64),
-            }
-        )
-        if len(lpdf) == 0 or len(rpdf) == 0:
-            return empty
-        ids_l = lpdf["id_l"].to_numpy(dtype=np.int64)
-        ids_r = rpdf["id_r"].to_numpy(dtype=np.int64)
-        ml = np.array(list(lpdf["emb_l"]), dtype=np.float64)
-        mr = np.array(list(rpdf["emb_r"]), dtype=np.float64)
-        for m in (ml, mr):
-            n = np.linalg.norm(m, axis=1, keepdims=True)
-            n[n == 0.0] = 1.0
-            m /= n
-        sims = ml @ mr.T
-        directions = [(ids_l, ids_r, sims)]
-        if bi != bj:  # diagonal pairs cover both directions in one GEMM
-            directions.append((ids_r, ids_l, sims.T))
-        frames = []
-        for q_ids, c_ids, S in directions:
-            # Whole-block vectorized partial top-k (round 12; guide §4.2
-            # — the previous per-row Python loop ran one lexsort AND
-            # built one pandas frame PER QUERY ROW, ~18k tiny frames per
-            # call at sf0.1; measured 2.3 s → 1.3 s, identical edges).
-            # The (rounded-sim DESC, neighbor_id ASC) order — the same
-            # order as the global row_number and the oracle — packs into
-            # ONE int64 composite key: the 6dp-rounded sim is an exact
-            # integer in [-1e6, 1e6] after ×1e6, so
-            # (1_000_001 - sim_int) << 33 | neighbor_id is
-            # order-isomorphic to the lexicographic rank for ids < 2^33.
-            # id-domain guard (round 13): the packing below is order-
-            # isomorphic ONLY for ids in [0, 2^33) — an id outside the
-            # domain would silently corrupt ranking across adjacent
-            # sim buckets, so fail loudly instead (the lexsort
-            # fallback for wider ids is a feature change; at the
-            # shipped id domains this never trips)
-            if len(c_ids) and (
-                c_ids.min() < 0 or c_ids.max() >= (np.int64(1) << 33)
-            ):
-                raise ValueError(
-                    "knn_self_join: vec_id outside [0, 2^33) — the int64 "
-                    "composite ranking key cannot represent this id domain"
-                )
-            sr = np.rint(np.round(S, 6) * 1e6).astype(np.int64)
-            comp = (np.int64(1_000_001) - sr) * (np.int64(1) << 33) + c_ids[
-                None, :
-            ]
-            comp = np.where(
-                c_ids[None, :] == q_ids[:, None], _SENTINEL, comp
-            )
-            width = comp.shape[1]
-            t_eff = min(take, width)
-            if t_eff == 0:
-                continue
-            if t_eff < width:
-                part = np.argpartition(comp, t_eff - 1, axis=1)[:, :t_eff]
-            else:
-                part = np.broadcast_to(np.arange(width), comp.shape).copy()
-            sub = np.take_along_axis(comp, part, axis=1)
-            order = np.argsort(sub, axis=1, kind="stable")
-            idx = np.take_along_axis(part, order, axis=1)
-            subsorted = np.take_along_axis(sub, order, axis=1)
-            keep = (subsorted < _SENTINEL).reshape(-1)
-            rows = np.repeat(np.arange(len(q_ids)), t_eff)[keep]
-            cols = idx.reshape(-1)[keep]
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "vec_id": q_ids[rows],
-                        "neighbor_id": c_ids[cols],
-                        "sim": S[rows, cols],
-                    }
-                )
-            )
-        if not frames:
-            return empty
-        return pd.concat(frames, ignore_index=True)
-
-    cand = (
-        left.groupBy("bi", "bj")
-        .cogroup(right.groupBy("bi", "bj"))
-        .applyInPandas(score, schema="vec_id long, neighbor_id long, sim double")
-    )
+    cand = _block_pairs(e, score, "vec_id long, neighbor_id long, sim double")
     w = Window.partitionBy("vec_id").orderBy(F.desc(F.round("sim", 6)), "neighbor_id")
     return (
         cand.withColumn("rank", F.row_number().over(w))
@@ -1047,7 +1043,7 @@ def semdedup_groups(
         F.col("embedding"),
     )
     cent_ids, cent_mat = _collect_matrix(centroids, "cell", "embedding")
-    cent_ids_u, cent_units = _unit_rows(cent_ids, cent_mat)
+    cent_units = _unit_rows(cent_mat)
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1055,7 +1051,7 @@ def semdedup_groups(
                 continue
             ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             mat = np.array(list(pdf["embedding"]), dtype=np.float64)
-            _, units = _unit_rows(ids, mat)
+            units = _unit_rows(mat)
             # 9dp quantization BEFORE the argmax (the PCA-oracle
             # recipe): an ulp-level centroid tie from different
             # summation order across engines must not flip a
@@ -1066,7 +1062,7 @@ def semdedup_groups(
             yield pd.DataFrame(
                 {
                     "vec_id": ids,
-                    "cell": cent_ids_u[best],
+                    "cell": cent_ids[best],
                     "cent_sim": sims[np.arange(len(ids)), best],
                     "embedding": pdf["embedding"],
                 }
@@ -1095,7 +1091,7 @@ def semdedup_groups(
         if len(ids) < 2:
             return empty
         mat = np.array(list(pdf["embedding"]), dtype=np.float64)
-        _, units = _unit_rows(ids, mat)
+        units = _unit_rows(mat)
         sims = np.round(units @ units.T, 6)
         adj = sims >= eps
         np.fill_diagonal(adj, False)
@@ -1940,7 +1936,7 @@ def q_simplified_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding"),
     )
     cent_ids, cent_mat = _collect_matrix(centroids, "cell", "embedding")
-    cent_ids, cent_units = _unit_rows(cent_ids, cent_mat)
+    cent_units = _unit_rows(cent_mat)
 
     def top2(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1948,7 +1944,7 @@ def q_simplified_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
                 continue
             ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             mat = np.array(list(pdf["embedding"]), dtype=np.float64)
-            _, units = _unit_rows(ids, mat)
+            units = _unit_rows(mat)
             sims = np.round(units @ cent_units.T, 6)  # 6dp BEFORE ranking
             # ties → lowest cell id: lexsort on (-sim, cell)
             order = np.lexsort(

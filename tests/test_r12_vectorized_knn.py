@@ -8,6 +8,7 @@ reference over the whole corpus.
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 
 def test_knn_self_join_matches_brute_force(spark, sf_dir):
@@ -38,3 +39,33 @@ def test_knn_self_join_matches_brute_force(spark, sf_dir):
         for r in knn_self_join(e, k=MUTUAL_KNN_K).collect()
     }
     assert got == expected
+
+
+def _top5_of_query0(fn, e):
+    from mi_inbound_pulsar_spark.operators.similarity import (
+        brute_force_topk,
+        knn_self_join,
+    )
+
+    if fn == "brute_force_topk":
+        out = brute_force_topk(e, e.filter("vec_id = 0"), 5)
+    else:
+        out = knn_self_join(e, 5).filter("vec_id = 0")
+    return sorted(r["neighbor_id"] for r in out.collect())
+
+
+@pytest.mark.parametrize("fn", ["brute_force_topk", "knn_self_join"])
+def test_exact_ties_break_on_neighbor_id(spark, fn):
+    """Exact-duplicate neighbours tie at every precision, so the top-k
+    must break them on neighbor_id ASC (the oracles' ``ORDER BY sim
+    DESC, neighbor_id``), not on the order rows sit in a batch. Thirty
+    copies of the query vector are laid out in DESCENDING id order in
+    one partition; a batch-order cut to k + 8 would keep ids 100..88
+    and return 88..92."""
+    rng = np.random.default_rng(7)
+    q = [1.0, 2.0, 3.0, 4.0]
+    rows = [(0, q)]
+    rows += [(i, q) for i in range(100, 70, -1)]
+    rows += [(i, [float(x) for x in rng.normal(size=4)]) for i in range(1, 21)]
+    e = spark.createDataFrame(rows, "vec_id long, embedding array<double>").coalesce(1)
+    assert _top5_of_query0(fn, e) == [71, 72, 73, 74, 75]
