@@ -200,7 +200,6 @@ _PRIORITY = (
     "q04_order_priority",
     "q06_forecast_revenue",
     "q10_returned_items",
-    "q12_priority_by_flag",
     "q14_promo_effect",
     "q18_large_volume",
     "q19_disjunctive_predicates",
@@ -278,7 +277,6 @@ _PRIORITY = (
     "q_chi2_feature_selection",
     "q_classifier_threshold_sweep",
     "q_word2vec_subsample",
-    "q_local_outlier_factor",
     "q_seasonal_mann_kendall",
     "q_feature_drift_report",
     "q_mantel_haenszel",
@@ -296,7 +294,6 @@ _PRIORITY = (
     "q_pr_auc_average_precision",
     "q_link_prediction_panel",
     "q_rich_club",
-    "q_association_rules",
     "q_cumulative_incidence",
     "q_markov_entropy_rate",
     "q_count_sketch_audit",
@@ -323,7 +320,6 @@ _PRIORITY = (
     "q_permutation_test",
     "q_precision_recall_at_k",
     "q_rmst_difference",
-    "q_streaming_composed_replay",
     "q_table_profile",
     "q_term_burstiness",
     "q_theil_sen",

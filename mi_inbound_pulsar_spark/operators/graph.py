@@ -395,13 +395,15 @@ def oriented_triangle_count(edges: DataFrame, deg: DataFrame | None = None) -> D
 
 
 # --------------------------------------------------------------------------
-# Shared purchase-graph edge list + PageRank fixpoint
+# Shared purchase-graph edge list + ppm power-iteration kernel
 # --------------------------------------------------------------------------
+PPM_ROUNDS = 3
 
 
 def purchase_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric customer↔supplier purchase edge list, shared by the
-    PageRank / Katz / personalized-PageRank fixpoints.
+    three :func:`ppm_iterate` fixpoints (PageRank, Katz, personalized
+    PageRank), degree assortativity and the rich-club coefficient.
 
     Two scale-deliberate choices:
 
@@ -442,6 +444,45 @@ def purchase_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition("src")
         .transform(eager_checkpoint)
     )
+
+
+def ppm_iterate(contrib: DataFrame, nodes: DataFrame, alpha_ppm: int) -> DataFrame:
+    """The parts-per-million integer power iteration behind PageRank,
+    Katz and personalized PageRank: ``PPM_ROUNDS`` synchronous rounds
+    of ``x ← restart + alpha_ppm·Σ(x DIV d) DIV 1e6``.
+
+    ``contrib`` is (src, dst, d): one row per directed edge, ``d`` the
+    divisor of src's mass (its out-degree, or 1 for an unnormalized
+    walk). ``nodes`` is (node, x, restart), all longs: the start vector
+    and the per-node restart mass; it is checkpointed here, once, since
+    every round reads it. Returns the final (node, x).
+
+    Plan per round: one join of the rank vector onto ``contrib`` (a
+    src-partitioned edge list keeps the edge side in place, so only
+    the node-sized side shuffles), one aggregate on dst, one left join
+    back to the node set — the synchronous superstep of Pregel-style
+    vertex programs. Integer arithmetic makes the vector bit-identical
+    on every engine, where a float iteration drifts with summation
+    order.
+    """
+    nodes = eager_checkpoint(nodes)
+    restart = nodes.select("node", "restart")
+    x = nodes.select("node", "x")
+    for _ in range(PPM_ROUNDS):
+        inflow = (
+            contrib.join(x.withColumnsRenamed({"node": "src"}), "src")
+            .groupBy("dst")
+            .agg(F.sum(F.expr("x DIV d")).alias("inflow"))
+            .withColumnsRenamed({"dst": "node"})
+        )
+        x = restart.join(inflow, "node", "left").select(
+            "node",
+            (
+                F.col("restart")
+                + F.expr(f"{alpha_ppm} * coalesce(inflow, 0) DIV 1000000")
+            ).cast("long").alias("x"),
+        )
+    return x
 
 
 @query(
@@ -494,39 +535,23 @@ def q_pagerank_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (3 synchronous iterations, damping 0.85) over the
     customer↔supplier purchase graph — "important" suppliers are those
     bought from by customers who themselves buy broadly. The rank is
-    computed in **parts-per-million integer arithmetic** (`r DIV
-    outdeg`, then `(850000·Σ) DIV 1e6`): every engine produces the
-    bit-identical fixpoint, so the oracle is hash-exact where a
-    float PageRank would drift with summation order.
-
-    Plan per iteration: one join of the rank vector onto the edge list
-    (both keyed by node — co-partitioned after the first shuffle), one
-    aggregate on dst, one left join back to the node set. The edge
-    list and out-degrees are computed once and persisted; 3 iterations
-    ⇒ 3 shuffle rounds, the textbook synchronous-PageRank shape (the
-    iterative-algorithm twin of the connected-components operator).
+    computed in **parts-per-million integer arithmetic** by
+    :func:`ppm_iterate` (`r DIV outdeg`, then `(850000·Σ) DIV 1e6`), so
+    the oracle is hash-exact. It is personalized PageRank with every
+    node a seed: start 1e6 and restart 150000 everywhere. The edge list
+    joined with its out-degrees is checkpointed once for all rounds.
     """
     edges = purchase_graph_edges(spark, sf_dir)
-    nodes = edges.select(F.col("src").alias("node")).distinct().transform(eager_checkpoint)
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    contrib_src = edges.join(outdeg, "src").transform(eager_checkpoint)
-    ranks = nodes.select("node", F.lit(1000000).cast("long").alias("r"))
-    for _ in range(3):
-        inflow = (
-            contrib_src.join(ranks.withColumnsRenamed({"node": "src"}), "src")
-            .groupBy("dst")
-            .agg(F.sum(F.expr("r DIV d")).alias("inflow"))
-            .withColumnsRenamed({"dst": "node"})
-        )
-        ranks = nodes.join(inflow, "node", "left").select(
-            "node",
-            (
-                F.lit(150000)
-                + F.expr("850000 * coalesce(inflow, 0) DIV 1000000")
-            ).cast("long").alias("r"),
-        )
+    contrib = edges.join(outdeg, "src").transform(eager_checkpoint)
+    nodes = edges.select(F.col("src").alias("node")).distinct().select(
+        "node",
+        F.lit(1000000).cast("long").alias("x"),
+        F.lit(150000).cast("long").alias("restart"),
+    )
     return (
-        ranks.select("node", F.col("r").alias("rank_ppm"))
+        ppm_iterate(contrib, nodes, 850000)
+        .select("node", F.col("x").alias("rank_ppm"))
         .orderBy(F.desc("rank_ppm"), "node")
         .limit(25)
     )
@@ -628,6 +653,49 @@ def copurchase_pairs(pl: DataFrame, min_common: int) -> DataFrame:
             "c",
         )
     )
+
+
+def undirected(e: DataFrame) -> DataFrame:
+    """(cust_a, cust_b) pairs as an (n, m) edge list in both
+    directions. Lazy: BFS-shaped callers checkpoint the result, the
+    k-core and label-propagation loops derive it narrowly per scan from
+    their checkpointed ``e``."""
+    return e.selectExpr("cust_a AS n", "cust_b AS m").unionByName(
+        e.selectExpr("cust_b AS n", "cust_a AS m")
+    )
+
+
+BFS_DEPTH = 3
+
+
+def bfs_levels(und: DataFrame, seeds: DataFrame) -> list[DataFrame]:
+    """Level-synchronous BFS to ``BFS_DEPTH`` hops over the
+    checkpointed (n, m) edge list ``und``; returns ``[seeds, d1, d2,
+    d3]``. The visited-set key is ``seeds.columns``: ``node`` plus any
+    source column (a landmark id) that rides along through every
+    frontier join, so one frame carries many BFS at once.
+
+    Each level is ``frontier ⋈ edges`` minus everything already
+    labeled — a hash join on the node id and an anti-join on the key
+    (broadcast or shuffle by frontier size, AQE's call) — and is
+    :func:`stats_reset_checkpoint`-ed, so every level plans against
+    flat inputs instead of the edge list plus all earlier levels.
+    """
+    carried = [c for c in seeds.columns if c != "node"]
+    levels = [eager_checkpoint(seeds)]
+    for _ in range(BFS_DEPTH):
+        visited = levels[0]
+        for lv in levels[1:]:
+            visited = visited.unionByName(lv)
+        levels.append(
+            stats_reset_checkpoint(
+                und.join(levels[-1].withColumnRenamed("node", "n"), "n")
+                .select(*carried, F.col("m").alias("node"))
+                .distinct()
+                .join(visited, seeds.columns, "left_anti")
+            )
+        )
+    return levels
 
 
 @query(
@@ -792,9 +860,7 @@ def q_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .coalesce(8)
         .transform(eager_checkpoint)
     )
-    und = e.selectExpr("cust_a AS n", "cust_b AS m").unionByName(
-        e.selectExpr("cust_b AS n", "cust_a AS m")
-    )
+    und = undirected(e)
     deg = (
         und.groupBy("n")
         .agg(F.count(F.lit(1)).alias("d"))
@@ -1095,42 +1161,18 @@ def q_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     algebra the other graph queries (PageRank, components, k-core,
     triangles) don't exercise.
 
-    Three hops unroll to three frontier joins — each one
-    ``frontier ⋈ edges`` minus everything already labeled, the exact
-    level-synchronous BFS step — so there is no iteration machinery
-    and the oracle is the same unrolled CTE chain. At 100 TB the
-    frontier join is a hash join keyed on the node id and the
-    visited-set subtraction is a broadcast or shuffle anti-join,
-    depending on frontier size (AQE's call); unbounded-depth BFS
-    would use the connected-components loop's localCheckpoint
-    discipline instead.
+    The three hops are :func:`bfs_levels` from a one-node seed, so
+    the oracle is the same unrolled CTE chain; unbounded-depth BFS
+    would use the connected-components loop instead.
     """
-    pl = part_posting_lists(spark, sf_dir)
-    e = copurchase_pairs(pl, COPURCHASE_MIN_COMMON).select("cust_a", "cust_b")
-    # localCheckpoint, not persist: every BFS level's plan references
-    # the edge list AND all previous levels — checkpointing keeps each
-    # level planning against flat inputs (the k-core lineage lesson)
-    und = (
-        e.selectExpr("cust_a AS n", "cust_b AS m")
-        .unionByName(e.selectExpr("cust_b AS n", "cust_a AS m"))
-        .transform(eager_checkpoint)
-    )
+    e = copurchase_pairs(
+        part_posting_lists(spark, sf_dir), COPURCHASE_MIN_COMMON
+    ).select("cust_a", "cust_b")
+    und = undirected(e).transform(eager_checkpoint)
     # empty graph -> agg still yields one NULL row; drop it so the
     # result is empty instead of a phantom dist=0 node
     seed = und.agg(F.min("n").alias("node")).filter(F.col("node").isNotNull())
-    levels = [seed.transform(eager_checkpoint)]
-    for _ in range(3):
-        visited = levels[0]
-        for lv in levels[1:]:
-            visited = visited.unionByName(lv)
-        frontier = levels[-1]
-        nxt = stats_reset_checkpoint(
-            und.join(frontier.withColumnRenamed("node", "n"), "n")
-            .select(F.col("m").alias("node"))
-            .distinct()
-            .join(visited, "node", "left_anti")
-        )
-        levels.append(nxt)
+    levels = bfs_levels(und, seed)
     verts = und.select(F.col("n").alias("node")).distinct()
     reach = None
     for dist, lv in enumerate(levels):
@@ -1418,9 +1460,7 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .coalesce(8)
         .transform(eager_checkpoint)
     )
-    und = e.selectExpr("cust_a AS n", "cust_b AS m").unionByName(
-        e.selectExpr("cust_b AS n", "cust_a AS m")
-    )
+    und = undirected(e)
     labels = und.select("n").distinct().withColumn("lab", F.col("n")).transform(eager_checkpoint)
     # the state's key domain is fixed across rounds (LPA relabels, it
     # never adds nodes), so ONE measured count over the just-
@@ -1936,40 +1976,22 @@ def q_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     splits its own mass — the centrality retrieval stacks use for
     "well-connected to well-connected" expansion.
 
-    Hash-exactness: the same parts-per-million integer arithmetic as
-    the PageRank fixpoint (x·1e6, `(200000·Σ) DIV 1e6` per round) —
-    both engines hit the bit-identical truncated fixpoint; float Katz
-    would drift with summation order. Magnitude is bounded by
-    (alpha·d̄)³·1e6 — int64 has nine orders of headroom over the
-    tested graphs; a 100 TB deployment with million-degree hubs re-scales
-    beta down before the loop.
-
-    Plan per iteration: rank-vector join onto the persisted edge list
-    + one dst aggregate + one left join to nodes — identical
-    synchronous-iteration shape (3 shuffle rounds) as PageRank, so the
-    same scale story holds.
+    Hash-exactness: the shared :func:`ppm_iterate` fixpoint with
+    x·1e6 and ``(200000·Σ) DIV 1e6`` per round; the edge list goes in
+    with a literal ``d = 1`` because ``x DIV 1 = x``. Magnitude is
+    bounded by (alpha·d̄)³·1e6 — int64 has nine orders of headroom over
+    the tested graphs; a 100 TB deployment with million-degree hubs
+    re-scales beta down before the loop.
     """
     edges = purchase_graph_edges(spark, sf_dir)
-    nodes = edges.select(F.col("src").alias("node")).distinct().transform(eager_checkpoint)
-    x = nodes.select("node", F.lit(1000000).cast("long").alias("x"))
-    for _ in range(3):
-        inflow = (
-            edges.join(x.withColumnsRenamed({"node": "src"}), "src")
-            .groupBy("dst")
-            .agg(F.sum("x").alias("inflow"))
-            .withColumnsRenamed({"dst": "node"})
-        )
-        x = nodes.join(inflow, "node", "left").select(
-            "node",
-            (
-                F.lit(1000000)
-                + F.expr("200000 * coalesce(inflow, 0) DIV 1000000")
-            )
-            .cast("long")
-            .alias("x"),
-        )
+    nodes = edges.select(F.col("src").alias("node")).distinct().select(
+        "node",
+        F.lit(1000000).cast("long").alias("x"),
+        F.lit(1000000).cast("long").alias("restart"),
+    )
     return (
-        x.select("node", F.col("x").alias("katz_ppm"))
+        ppm_iterate(edges.withColumn("d", F.lit(1)), nodes, 200000)
+        .select("node", F.col("x").alias("katz_ppm"))
         .orderBy(F.desc("katz_ppm"), "node")
         .limit(25)
     )
@@ -2050,55 +2072,37 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     answers "important *to these seeds*" — the similar-item /
     audience-expansion primitive recommender retrieval uses.
 
-    Hash-exactness: the shared parts-per-million integer fixpoint
-    (`x DIV d`, `(850000·Σ) DIV 1e6` per round, restart `150000·s`) —
-    bit-identical on both engines where float PPR would drift with
-    summation order.
-
-    Plan: the seed indicator is joined onto the node set ONCE
-    (plain hash join — node-scale state is never force-broadcast,
-    the q_label_propagation size-adaptive lesson) and persisted;
-    each iteration is the same rank-join + dst-aggregate +
-    node-join shape as PageRank — 3 shuffle rounds over
-    co-partitioned node-keyed frames.
+    Hash-exactness: the shared :func:`ppm_iterate` fixpoint (`x DIV
+    d`, `(850000·Σ) DIV 1e6` per round) with start ``1e6·s`` and
+    restart ``150000·s`` — bit-identical on both engines where float
+    PPR would drift with summation order. The seed indicator is joined
+    onto the node set once (plain hash join — node-scale state is
+    never force-broadcast, the q_label_propagation size-adaptive
+    lesson).
     """
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey"
     )
     edges = purchase_graph_edges(spark, sf_dir)
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    contrib_src = edges.join(outdeg, "src").transform(eager_checkpoint)
+    contrib = edges.join(outdeg, "src").transform(eager_checkpoint)
     seeds = cust.filter(F.col("c_nationkey") == 1).select(
         F.col("c_custkey").alias("node"), F.lit(1).alias("flag")
     )
-    ns = (
+    is_seed = F.coalesce("flag", F.lit(0)).cast("long")
+    nodes = (
         edges.select(F.col("src").alias("node"))
         .distinct()
         .join(seeds, "node", "left")
-        .select("node", F.coalesce("flag", F.lit(0)).alias("is_seed"))
-        .transform(eager_checkpoint)
-    )
-    x = ns.select(
-        "node", (F.col("is_seed") * 1000000).cast("long").alias("x")
-    )
-    for _ in range(3):
-        inflow = (
-            contrib_src.join(x.withColumnsRenamed({"node": "src"}), "src")
-            .groupBy("dst")
-            .agg(F.sum(F.expr("x DIV d")).alias("inflow"))
-            .withColumnsRenamed({"dst": "node"})
-        )
-        x = ns.join(inflow, "node", "left").select(
+        .select(
             "node",
-            (
-                F.lit(150000) * F.col("is_seed")
-                + F.expr("850000 * coalesce(inflow, 0) DIV 1000000")
-            )
-            .cast("long")
-            .alias("x"),
+            (is_seed * 1000000).alias("x"),
+            (is_seed * 150000).alias("restart"),
         )
+    )
     return (
-        x.filter(F.col("x") > 0)
+        ppm_iterate(contrib, nodes, 850000)
+        .filter(F.col("x") > 0)
         .select("node", F.col("x").alias("ppr_ppm"))
         .orderBy(F.desc("ppr_ppm"), "node")
         .limit(25)
@@ -2279,38 +2283,22 @@ def q_landmark_harmonic(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed by (landmark, node), so adding landmarks widens rows, never
     adds passes (accuracy ∝ 1/√L by Hoeffding, per Eppstein-Wang).
 
-    The multi-source frontier join is the q_bfs_distances
-    level-synchronous step with a landmark column along for the ride;
-    the visited-set subtraction anti-joins on (landmark, node).
+    The multi-source frontier is :func:`bfs_levels` with the landmark
+    column ``l`` in the seed frame, so the visited-set subtraction
+    anti-joins on (landmark, node).
     """
-    pl = part_posting_lists(spark, sf_dir)
-    e = copurchase_pairs(pl, COPURCHASE_MIN_COMMON).select("cust_a", "cust_b")
-    und = (
-        e.selectExpr("cust_a AS n", "cust_b AS m")
-        .unionByName(e.selectExpr("cust_b AS n", "cust_a AS m"))
-        .transform(eager_checkpoint)
-    )
+    e = copurchase_pairs(
+        part_posting_lists(spark, sf_dir), COPURCHASE_MIN_COMMON
+    ).select("cust_a", "cust_b")
+    und = undirected(e).transform(eager_checkpoint)
     verts = und.select(F.col("n").alias("node")).distinct()
     nv = verts.agg(F.count(F.lit(1)).alias("nn"))
     seeds = (
         verts.orderBy("node")
         .limit(HARMONIC_LANDMARKS)
         .select(F.col("node").alias("l"), "node")
-        .transform(eager_checkpoint)
     )
-    levels = [seeds]
-    for _ in range(3):
-        visited = levels[0]
-        for lv in levels[1:]:
-            visited = visited.unionByName(lv)
-        frontier = levels[-1]
-        nxt = stats_reset_checkpoint(
-            und.join(frontier.withColumnRenamed("node", "n"), "n")
-            .select("l", F.col("m").alias("node"))
-            .distinct()
-            .join(visited, ["l", "node"], "left_anti")
-        )
-        levels.append(nxt)
+    levels = bfs_levels(und, seeds)
     reach = None
     for dist, lv in enumerate(levels[1:], start=1):
         tagged = lv.select("l", "node", F.lit(dist).alias("dist"))

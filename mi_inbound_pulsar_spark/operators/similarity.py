@@ -131,20 +131,25 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = TOP_K) -> D
     queries: (vec_id, embedding) — small, collected + broadcast.
     """
     q_ids, q_mat = _collect_matrix(queries, "vec_id", "embedding")
-    q_units = _unit_rows(q_mat)
+    if len(q_ids) == 0:
+        # no queries, no pairs (and an empty collect is 1-D, which
+        # _unit_rows cannot normalize)
+        partial = corpus.sparkSession.createDataFrame([], SCORE_SCHEMA)
+    else:
+        q_units = _unit_rows(q_mat)
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            c_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            c_units = _unit_rows(np.array(list(pdf["embedding"]), dtype=np.float64))
-            # per-batch candidates with a k + 8 tie margin; the global
-            # row_number below ranks them exactly
-            qs, cs, sims = _topk_candidates(q_units @ c_units.T, q_ids, c_ids, k + 8)
-            yield pd.DataFrame({"query_id": qs, "neighbor_id": cs, "sim": sims})
+        def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                c_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+                c_units = _unit_rows(np.array(list(pdf["embedding"]), dtype=np.float64))
+                # per-batch candidates with a k + 8 tie margin; the global
+                # row_number below ranks them exactly
+                qs, cs, sims = _topk_candidates(q_units @ c_units.T, q_ids, c_ids, k + 8)
+                yield pd.DataFrame({"query_id": qs, "neighbor_id": cs, "sim": sims})
 
-    partial = corpus.select("vec_id", "embedding").mapInPandas(score, schema=SCORE_SCHEMA)
+        partial = corpus.select("vec_id", "embedding").mapInPandas(score, schema=SCORE_SCHEMA)
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.col("neighbor_id"))
     return (
         partial.withColumn("rank", F.row_number().over(w))

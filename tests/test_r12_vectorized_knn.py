@@ -69,3 +69,16 @@ def test_exact_ties_break_on_neighbor_id(spark, fn):
     rows += [(i, [float(x) for x in rng.normal(size=4)]) for i in range(1, 21)]
     e = spark.createDataFrame(rows, "vec_id long, embedding array<double>").coalesce(1)
     assert _top5_of_query0(fn, e) == [71, 72, 73, 74, 75]
+
+
+def test_brute_force_topk_empty_queries(spark):
+    """No query rows give no result rows, with the same schema as a
+    non-empty call (an empty collect is a 1-D matrix, which the row
+    normalization must never see)."""
+    from mi_inbound_pulsar_spark.operators.similarity import brute_force_topk
+
+    rows = [(i, [float(i), 1.0, 2.0]) for i in range(8)]
+    e = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    empty = brute_force_topk(e, e.filter("vec_id > 100"), 3)
+    assert empty.collect() == []
+    assert empty.schema == brute_force_topk(e, e.filter("vec_id = 0"), 3).schema

@@ -14,6 +14,7 @@ from __future__ import annotations
 from collections import Counter, defaultdict
 
 import pyarrow.parquet as pq
+import pytest
 
 SF01 = "/root/testdata/sf0.01"
 
@@ -122,10 +123,16 @@ def _bipartite(sf: str) -> set[tuple[int, int]]:
     }
 
 
-def test_pagerank_matches_pure_python_integer_ppm(spark, sf_dir):
+@pytest.mark.parametrize("variant", ["pagerank", "personalized"])
+def test_pagerank_matches_pure_python_integer_ppm(spark, sf_dir, variant):
     """The ppm-integer PageRank (3 iterations, damping 0.85, r DIV d
-    contributions) replayed with Python ints — bit-exact."""
-    from mi_inbound_pulsar_spark.operators.graph import q_pagerank_purchases
+    contributions, restart 150000 on seeds) replayed with Python ints —
+    bit-exact. Global PageRank seeds every node; personalized PageRank
+    seeds the nation-1 customers and keeps the nodes with mass."""
+    from mi_inbound_pulsar_spark.operators.graph import (
+        q_pagerank_purchases,
+        q_personalized_pagerank,
+    )
 
     cs = {(c, s + 1_000_000_000) for c, s in _bipartite(sf_dir)}
     edges = cs | {(s, c) for c, s in cs}
@@ -133,20 +140,32 @@ def test_pagerank_matches_pure_python_integer_ppm(spark, sf_dir):
     for a, b in edges:
         out[a].append(b)
     nodes = set(out)
-    r = {n: 1000000 for n in nodes}
+    if variant == "pagerank":
+        fn, col, seeds = q_pagerank_purchases, "rank_ppm", nodes
+    else:
+        cust = pq.read_table(
+            f"{sf_dir}/customer.parquet", columns=["c_custkey", "c_nationkey"]
+        ).to_pydict()
+        fn, col = q_personalized_pagerank, "ppr_ppm"
+        seeds = {
+            c for c, nk in zip(cust["c_custkey"], cust["c_nationkey"]) if nk == 1
+        }
+    r = {n: 1000000 * (n in seeds) for n in nodes}
     for _ in range(3):
         inflow: Counter = Counter()
         for a, targets in out.items():
             contrib = r[a] // len(targets)
             for b in targets:
                 inflow[b] += contrib
-        r = {n: 150000 + 850000 * inflow.get(n, 0) // 1000000 for n in nodes}
-    want = sorted(((n, v) for n, v in r.items()), key=lambda t: (-t[1], t[0]))[:25]
+        r = {
+            n: 150000 * (n in seeds) + 850000 * inflow.get(n, 0) // 1000000
+            for n in nodes
+        }
+    want = sorted(
+        ((n, v) for n, v in r.items() if v > 0), key=lambda t: (-t[1], t[0])
+    )[:25]
 
-    got = [
-        (row["node"], row["rank_ppm"])
-        for row in q_pagerank_purchases(spark, sf_dir).collect()
-    ]
+    got = [(row["node"], row[col]) for row in fn(spark, sf_dir).collect()]
     assert got == want and len(want) == 25
 
 
@@ -216,3 +235,35 @@ def test_bfs_distances_matches_pure_python(spark, sf_dir):
         for r in q_bfs_distances(spark, sf_dir).collect()
     }
     assert got == want_rows
+
+
+# Spark jobs launched while BUILDING each graph query at sf0.01 on
+# local[4] (construction only, nothing executed): the eager checkpoints
+# of the shared kernels plus k-core's per-round count and label
+# propagation's node count. A checkpoint or count added to a kernel
+# raises these.
+GRAPH_BUILD_JOB_BUDGET = {
+    "q_pagerank_purchases": 12,
+    "q_katz_centrality": 8,
+    "q_personalized_pagerank": 14,
+    "q_bfs_distances": 26,
+    "q_landmark_harmonic": 26,
+    "q_kcore_peel": 22,
+    "q_label_propagation": 22,
+}
+
+
+@pytest.mark.parametrize("name", list(GRAPH_BUILD_JOB_BUDGET))
+def test_graph_build_job_budget(spark, name):
+    """The second build in the session is counted, so session caches
+    (``table_row_bound``) are warm and the count does not depend on
+    which test ran first."""
+    from mi_inbound_pulsar_spark.operators import collect_queries
+
+    fn = collect_queries()[name]
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    fn(spark, SF01)
+    before = dag.numTotalJobs()
+    fn(spark, SF01)
+    jobs = dag.numTotalJobs() - before
+    assert jobs <= GRAPH_BUILD_JOB_BUDGET[name], jobs
