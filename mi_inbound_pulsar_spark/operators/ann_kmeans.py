@@ -9,28 +9,21 @@ without an oracle (driver records a rows-only check); recall against
 the exact brute-force top-k is gated in tests/test_ann_kmeans.py.
 
 Scale design (the 100 TB shape):
-- Training never shuffles the corpus and never collects it. Each
-  Lloyd's iteration is ONE narrow pass: ``mapInPandas`` computes, per
-  Arrow batch, the per-cell partial (count, sum-vector) with a numpy
-  GEMM argmax; only k × n_partitions tiny partial rows come back to
-  the driver, which reduces them (k × 64 floats) and re-broadcasts.
-  This is the classic partial-aggregate pattern — identical cost shape
-  to Spark's own map-side combine.
-- On a real cluster you train on a sampled corpus (``sample_frac``)
-  — sampling is a narrow op too.
+- Training never shuffles the corpus and never collects it:
+  :func:`lloyd_partials` is the Lloyd step of both this trainer and
+  ``ann_pq.train_pq_codebooks`` (k-means is its one-subspace case).
 - Serving IS :func:`similarity.ivf_flat_topk`, the plan the
   oracle-checked ``q_ann_ivf_topk`` runs; only the centroid matrix
-  differs.
+  differs. The recall flag is :func:`similarity.recall_gate`.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from mi_inbound_pulsar_spark.operators import query
 from mi_inbound_pulsar_spark.operators.similarity import (
@@ -38,6 +31,7 @@ from mi_inbound_pulsar_spark.operators.similarity import (
     _collect_matrix,
     _unit_rows,
     ivf_flat_topk,
+    recall_gate,
 )
 from mi_inbound_pulsar_spark.sources.tables import load_table
 
@@ -45,11 +39,86 @@ K_CELLS = 16
 N_ITER = 8
 
 
+def lloyd_init(vecs: DataFrame, k: int) -> np.ndarray:
+    """Deterministic Lloyd init: the first ``k`` vectors by vec_id, as
+    unit rows."""
+    _, init_mat = _collect_matrix(vecs.orderBy("vec_id").limit(k), "vec_id", "embedding")
+    return _unit_rows(init_mat)
+
+
+def lloyd_partials(
+    vecs: DataFrame,
+    books: np.ndarray,
+    assign: Callable[[np.ndarray, np.ndarray], np.ndarray],
+) -> tuple[np.ndarray, np.ndarray]:
+    """One distributed Lloyd step over ``m`` subspaces at once.
+
+    ``books`` is the (m, k, dsub) stack of per-subspace centroids and
+    ``assign(units, books)`` gives each unit row's code in every
+    subspace, (n, m). One narrow ``mapInPandas`` pass folds each
+    partition into (subspace, code, cnt, vec_sum) partials — only
+    m × k tiny rows per partition reach the driver, the classic
+    map-side-combine shape — which are reduced to (m, k) counts and
+    (m, k, dsub) sums. Summation order is fixed by the partition order,
+    so a step is deterministic.
+    """
+    books_bc = vecs.sparkSession.sparkContext.broadcast(books)
+
+    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        bks = books_bc.value
+        m_, k_, d_ = bks.shape
+        acc_cnt = np.zeros((m_, k_), dtype=np.int64)
+        acc_sum = np.zeros_like(bks)
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            units = _unit_rows(np.array(list(pdf["embedding"]), dtype=np.float64))
+            codes = assign(units, bks)
+            for j in range(m_):
+                acc_cnt[j] += np.bincount(codes[:, j], minlength=k_)
+                np.add.at(acc_sum[j], codes[:, j], units[:, j * d_ : (j + 1) * d_])
+        js, ks = np.nonzero(acc_cnt)
+        if js.size == 0:
+            # empty partition: yield NOTHING. An empty frame here
+            # is fatal, not merely wasteful — pandas infers the
+            # empty "vec_sum" list column as dtype float64 and
+            # Arrow cannot convert a float64 ndarray (even a
+            # 0-row one) to list<double>. Empty input partitions
+            # are routine at cluster scale (file-split alignment,
+            # AQE-coalesced shuffles); found by the round-12
+            # sf1.0 wide scaling run.
+            return
+        yield pd.DataFrame(
+            {
+                "subspace": js.astype(np.int64),
+                "code": ks.astype(np.int64),
+                "cnt": acc_cnt[js, ks],
+                "vec_sum": list(acc_sum[js, ks]),
+            }
+        )
+
+    rows = vecs.mapInPandas(
+        partials, schema="subspace long, code long, cnt long, vec_sum array<double>"
+    ).collect()
+    books_bc.destroy()
+    cnt = np.zeros(books.shape[:2], dtype=np.int64)
+    sums = np.zeros_like(books)
+    for r in rows:
+        cnt[r.subspace, r.code] += r.cnt
+        sums[r.subspace, r.code] += np.asarray(r.vec_sum, dtype=np.float64)
+    return cnt, sums
+
+
+def _nearest_centroid(units: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """Spherical assignment, (n, 1): argmax cosine to the unit centroids
+    ``books[0]`` (first max → lowest cell). Not the PQ ``dot − ‖c‖²/2``
+    rule: subtracting a per-centroid constant can merge ulp-level
+    near-ties."""
+    return np.argmax(units @ books[0].T, axis=1)[:, None]
+
+
 def train_spherical_kmeans(
-    corpus: DataFrame,
-    k: int = K_CELLS,
-    n_iter: int = N_ITER,
-    sample_frac: float | None = None,
+    corpus: DataFrame, k: int = K_CELLS, n_iter: int = N_ITER
 ) -> np.ndarray:
     """Train unit-norm centroids with distributed Lloyd's iterations.
 
@@ -59,59 +128,12 @@ def train_spherical_kmeans(
     partial-sum reduce.
     """
     vecs = corpus.select("vec_id", "embedding")
-    if sample_frac is not None:
-        vecs = vecs.sample(fraction=sample_frac, seed=7)
-
-    _, init_mat = _collect_matrix(
-        vecs.orderBy("vec_id").limit(k), "vec_id", "embedding"
-    )
-    centroids = _unit_rows(init_mat)
-    sc = corpus.sparkSession.sparkContext
-
-    partial_schema = "cell long, cnt long, vec_sum array<double>"
+    centroids = lloyd_init(vecs, k)
     for _ in range(n_iter):
-        cent_bc = sc.broadcast(centroids)
-
-        def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            cents = cent_bc.value
-            acc_cnt = np.zeros(len(cents), dtype=np.int64)
-            acc_sum = np.zeros_like(cents)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                units = _unit_rows(np.array(list(pdf["embedding"]), dtype=np.float64))
-                best = np.argmax(units @ cents.T, axis=1)
-                acc_cnt += np.bincount(best, minlength=len(cents))
-                np.add.at(acc_sum, best, units)
-            cells = np.nonzero(acc_cnt)[0]
-            if cells.size == 0:
-                # empty partition: yield NOTHING. An empty frame here
-                # is fatal, not merely wasteful — pandas infers the
-                # empty "vec_sum" list column as dtype float64 and
-                # Arrow cannot convert a float64 ndarray (even a
-                # 0-row one) to list<double>. Empty input partitions
-                # are routine at cluster scale (file-split alignment,
-                # AQE-coalesced shuffles); found by the round-12
-                # sf1.0 wide scaling run.
-                return
-            yield pd.DataFrame(
-                {
-                    "cell": cells.astype(np.int64),
-                    "cnt": acc_cnt[cells],
-                    "vec_sum": list(acc_sum[cells]),
-                }
-            )
-
-        rows = vecs.mapInPandas(partials, schema=partial_schema).collect()
-        cent_bc.destroy()
-        new_cnt = np.zeros(len(centroids), dtype=np.int64)
-        new_sum = np.zeros_like(centroids)
-        for r in rows:
-            new_cnt[r.cell] += r.cnt
-            new_sum[r.cell] += np.asarray(r.vec_sum, dtype=np.float64)
-        moved = new_cnt > 0
+        cnt, sums = lloyd_partials(vecs, centroids[None], _nearest_centroid)
+        moved = cnt[0] > 0
         next_c = centroids.copy()
-        next_c[moved] = new_sum[moved]  # empty cells keep their old centroid
+        next_c[moved] = sums[0][moved]  # empty cells keep their old centroid
         centroids = _unit_rows(next_c)
     return centroids
 
@@ -150,20 +172,5 @@ def q_ann_kmeans_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the flag is stable — the same technique that made the HLL and
     t-digest sketches hash-checkable (exact twin + tolerance claim).
     """
-    approx = q_ann_kmeans_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    e = load_table(spark, sf_dir, "embeddings")
-    from mi_inbound_pulsar_spark.operators.similarity import brute_force_topk
-
-    exact = brute_force_topk(e, e.filter(F.col("vec_id") < N_QUERIES)).select(
-        "query_id", "neighbor_id"
-    )
-    n_hit = approx.join(exact, ["query_id", "neighbor_id"]).agg(
-        F.count(F.lit(1)).alias("hits")
-    )
-    totals = exact.agg(
-        F.count(F.lit(1)).alias("n_exact"),
-        F.count_distinct("query_id").alias("n_queries"),
-    )
-    return totals.crossJoin(n_hit).select(
-        "n_queries", (F.col("hits") / F.col("n_exact") >= 0.8).alias("recall_ok")
-    )
+    approx = q_ann_kmeans_topk(spark, sf_dir)
+    return recall_gate(approx, load_table(spark, sf_dir, "embeddings"), 0.8)

@@ -28,7 +28,12 @@ Execution design (the 100 TB shape):
 - ``q_ann_ivf_topk`` is the sub-linear path: coarse-quantize the
   corpus to centroid cells, probe only the ``nprobe`` nearest cells
   per query. At 100 TB the assignment output is written bucketed by
-  cell id so a probe is partition pruning, not a filter.
+  cell id so a probe is partition pruning, not a filter. The ANN
+  family (this module, ``ann_kmeans`` and ``ann_pq``) shares these pieces:
+  ``query_units`` (the query side), ``ivf_probe`` (every query's
+  nearest cells in one lexsort), ``exact_rerank_topk`` (the only
+  per-pair einsum rerank and top-k merge) and ``recall_gate`` (the
+  recall-vs-brute-force flag of every bounded-oracle ANN query).
 
 Reference parity: the reference (a Pulsar ingestion connector) has no
 similarity operators — this module is the north-star extension named
@@ -158,6 +163,28 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = TOP_K) -> D
     )
 
 
+def recall_gate(approx: DataFrame, e: DataFrame, floor: float) -> DataFrame:
+    """The driver-hashable (n_queries, recall_ok) row of an approximate
+    top-k: recall_ok is whether the share of the exact brute-force
+    top-k pairs over ``e`` that ``approx`` (query_id, neighbor_id)
+    also returns is at least ``floor``."""
+    exact = brute_force_topk(e, e.filter(F.col("vec_id") < N_QUERIES)).select(
+        "query_id", "neighbor_id"
+    )
+    n_hit = (
+        approx.select("query_id", "neighbor_id")
+        .join(exact, ["query_id", "neighbor_id"])
+        .agg(F.count(F.lit(1)).alias("hits"))
+    )
+    totals = exact.agg(
+        F.count(F.lit(1)).alias("n_exact"),
+        F.count_distinct("query_id").alias("n_queries"),
+    )
+    return totals.crossJoin(n_hit).select(
+        "n_queries", (F.col("hits") / F.col("n_exact") >= floor).alias("recall_ok")
+    )
+
+
 @query(
     "q_cosine_topk",
     oracle=f"""
@@ -212,50 +239,63 @@ def ivf_assign_cells(corpus: DataFrame, cent_ids: np.ndarray, cent_units: np.nda
     )
 
 
-def ivf_flat_topk(corpus: DataFrame, cent_ids: np.ndarray, cent_units: np.ndarray) -> DataFrame:
-    """IVF-Flat top-k of the first N_QUERIES vectors over the given
-    unit centroids: assign → probe the N_PROBE nearest cells → exact
-    rerank of the probed cells only. Shared by the stride-centroid
-    ``q_ann_ivf_topk`` and the k-means ``ann_kmeans.q_ann_kmeans_topk``,
-    so the trained index serves through the oracle-checked plan."""
-    assigned = ivf_assign_cells(corpus, cent_ids, cent_units)
+def query_units(corpus: DataFrame, dim: int) -> tuple[np.ndarray, np.ndarray]:
+    """The query side of every ANN path: the ``vec_id < N_QUERIES`` rows
+    of ``corpus`` as sorted ids and a (n_queries, dim) unit matrix.
 
-    # probe cells per query (query side is tiny → plain numpy on driver)
+    No query rows give a (0, dim) matrix (an empty collect is 1-D), so
+    every product below yields no rows and the caller's frame is empty.
+    """
     q_ids, q_mat = _collect_matrix(
         corpus.filter(F.col("vec_id") < N_QUERIES), "vec_id", "embedding"
     )
-    q_units = _unit_rows(q_mat)
-    probe_sims = q_units @ cent_units.T
-    probe_rows = [
-        (int(q_ids[qi]), int(cent_ids[ci]))
-        for qi in range(len(q_ids))
-        # stable sort on (-sim, cell) == ORDER BY sim DESC, cell
-        for ci in np.lexsort((cent_ids, -probe_sims[qi]))[:N_PROBE]
-    ]
-    probes = F.broadcast(
-        corpus.sparkSession.createDataFrame(probe_rows, "query_id long, cell long")
-    )
+    return q_ids, _unit_rows(q_mat.reshape(len(q_ids), dim))
 
-    # scan only the probed cells; score candidates with the GEMM scorer
-    candidates = assigned.join(probes, "cell").select("query_id", "vec_id", "embedding")
+
+def _top_cells(S: np.ndarray, cent_ids: np.ndarray, n: int) -> np.ndarray:
+    """Column indices of each row's ``n`` best cells in a (rows × cells)
+    similarity block: ORDER BY sim DESC, cell — one stable lexsort for
+    the whole block."""
+    return np.lexsort((np.broadcast_to(cent_ids, S.shape), -S), axis=1)[:, :n]
+
+
+def ivf_probe(
+    spark: SparkSession,
+    q_ids: np.ndarray,
+    q_units: np.ndarray,
+    cent_ids: np.ndarray,
+    cent_units: np.ndarray,
+    n_probe: int,
+) -> DataFrame:
+    """The broadcast (query_id, cell) frame of each query's ``n_probe``
+    nearest cells (the query side is tiny → plain numpy on the driver)."""
+    cells = cent_ids[_top_cells(q_units @ cent_units.T, cent_ids, n_probe)]
+    rows = zip(np.repeat(q_ids, cells.shape[1]).tolist(), cells.ravel().tolist())
+    return F.broadcast(spark.createDataFrame(list(rows), "query_id long, cell long"))
+
+
+def exact_rerank_topk(pairs: DataFrame, q_ids: np.ndarray, q_units: np.ndarray) -> DataFrame:
+    """Exact cosine top-k of candidate ``(query_id, neighbor_id,
+    embedding)`` pairs: one einsum per Arrow batch, self-pairs dropped,
+    then the row_number merge. ``q_ids`` is sorted (``query_units``), so
+    a query's unit row is found by ``searchsorted``."""
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qidx = {int(q): i for i, q in enumerate(q_ids)}
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            c_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            c_mat = np.array(list(pdf["embedding"]), dtype=np.float64)
-            c_units = _unit_rows(c_mat)
             qs = pdf["query_id"].to_numpy(dtype=np.int64)
-            qrows = q_units[[qidx[int(q)] for q in qs]]
-            sims = np.einsum("ij,ij->i", qrows, c_units)
+            c_ids = pdf["neighbor_id"].to_numpy(dtype=np.int64)
+            c_units = _unit_rows(np.array(list(pdf["embedding"]), dtype=np.float64))
+            sims = np.einsum("ij,ij->i", q_units[np.searchsorted(q_ids, qs)], c_units)
             keep = c_ids != qs
             yield pd.DataFrame(
                 {"query_id": qs[keep], "neighbor_id": c_ids[keep], "sim": sims[keep]}
             )
 
-    scored = candidates.mapInPandas(score, schema=SCORE_SCHEMA)
+    scored = pairs.select("query_id", "neighbor_id", "embedding").mapInPandas(
+        score, schema=SCORE_SCHEMA
+    )
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.col("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -263,6 +303,34 @@ def ivf_flat_topk(corpus: DataFrame, cent_ids: np.ndarray, cent_units: np.ndarra
         .select("query_id", "neighbor_id", "rank", F.round("sim", 6).alias("sim"))
         .orderBy("query_id", "rank")
     )
+
+
+def ivf_flat_topk(corpus: DataFrame, cent_ids: np.ndarray, cent_units: np.ndarray) -> DataFrame:
+    """IVF-Flat top-k of the first N_QUERIES vectors over the given
+    unit centroids: assign → probe the N_PROBE nearest cells → exact
+    rerank of the probed cells only. Shared by the stride-centroid
+    ``q_ann_ivf_topk`` and the k-means ``ann_kmeans.q_ann_kmeans_topk``,
+    so the trained index serves through the oracle-checked plan."""
+    assigned = ivf_assign_cells(corpus, cent_ids, cent_units)
+    q_ids, q_units = query_units(corpus, cent_units.shape[1])
+    probes = ivf_probe(corpus.sparkSession, q_ids, q_units, cent_ids, cent_units, N_PROBE)
+    # scan only the probed cells
+    pairs = assigned.join(probes, "cell").select(
+        "query_id", F.col("vec_id").alias("neighbor_id"), "embedding"
+    )
+    return exact_rerank_topk(pairs, q_ids, q_units)
+
+
+def _stride_centroids(e: DataFrame, stride: int = CENTROID_STRIDE) -> tuple[np.ndarray, np.ndarray]:
+    """Deterministic centroids an oracle can replay: every
+    ``stride``-th vector, cell ``vec_id / stride``, as sorted cell ids
+    and unit rows."""
+    centroids = e.filter(F.col("vec_id") % stride == 0).select(
+        (F.col("vec_id") / stride).cast("long").alias("cell"),
+        F.col("embedding"),
+    )
+    cent_ids, cent_mat = _collect_matrix(centroids, "cell", "embedding")
+    return cent_ids, _unit_rows(cent_mat)
 
 
 @query(
@@ -314,15 +382,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the operator shape (assign → probe → rerank) is unchanged.
     """
     e = load_table(spark, sf_dir, "embeddings")
-
-    centroids = e.filter(F.col("vec_id") % CENTROID_STRIDE == 0).select(
-        (F.col("vec_id") / CENTROID_STRIDE).cast("long").alias("cell"),
-        F.col("embedding"),
-    )
-    cent_ids, cent_mat = _collect_matrix(centroids, "cell", "embedding")
-    cent_units = _unit_rows(cent_mat)
-
-    return ivf_flat_topk(e, cent_ids, cent_units)
+    return ivf_flat_topk(e, *_stride_centroids(e))
 
 
 # --------------------------------------------------------------------------
@@ -1043,12 +1103,7 @@ def semdedup_groups(
     """Library form of :func:`q_semdedup`: SemDeDup duplicate groups
     over an (vec_id, embedding) frame with stride-``stride`` centroids
     and epsilon ``eps``. See the query docstring for the plan shape."""
-    centroids = e.filter(F.col("vec_id") % stride == 0).select(
-        (F.col("vec_id") / stride).cast("long").alias("cell"),
-        F.col("embedding"),
-    )
-    cent_ids, cent_mat = _collect_matrix(centroids, "cell", "embedding")
-    cent_units = _unit_rows(cent_mat)
+    cent_ids, cent_units = _stride_centroids(e, stride)
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1357,7 +1412,7 @@ def q_int8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             if len(pdf) == 0:
                 # an empty batch's list column would infer float64 and
                 # fail Arrow's list<double> conversion (see
-                # train_spherical_kmeans)
+                # ann_kmeans.lloyd_partials)
                 continue
             m = np.array(list(pdf["embedding"]), dtype=np.float64)
             q = np.clip(np.floor(m / s * 127 + 0.5), -127, 127)
@@ -1369,20 +1424,8 @@ def q_int8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     deq_corpus = e.select("vec_id", "embedding").mapInPandas(
         dequantize, schema="vec_id long, embedding array<double>"
     )
-    queries = e.filter(F.col("vec_id") < N_QUERIES)
-    approx = brute_force_topk(deq_corpus, queries).select("query_id", "neighbor_id")
-    exact = brute_force_topk(e, queries).select("query_id", "neighbor_id")
-    hits = approx.join(exact, ["query_id", "neighbor_id"]).agg(
-        F.count(F.lit(1)).alias("hits")
-    )
-    totals = exact.agg(
-        F.count(F.lit(1)).alias("n_exact"),
-        F.count_distinct("query_id").alias("n_queries"),
-    )
-    return totals.crossJoin(hits).select(
-        "n_queries",
-        (F.col("hits") / F.col("n_exact") >= INT8_RECALL_FLOOR).alias("recall_ok"),
-    )
+    approx = brute_force_topk(deq_corpus, e.filter(F.col("vec_id") < N_QUERIES))
+    return recall_gate(approx, e, INT8_RECALL_FLOOR)
 
 
 # --------------------------------------------------------------------------
@@ -1936,12 +1979,7 @@ def q_simplified_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles raw embeddings); output is |cells|-bounded.
     """
     e = load_table(spark, sf_dir, "embeddings")
-    centroids = e.filter(F.col("vec_id") % CENTROID_STRIDE == 0).select(
-        (F.col("vec_id") / CENTROID_STRIDE).cast("long").alias("cell"),
-        F.col("embedding"),
-    )
-    cent_ids, cent_mat = _collect_matrix(centroids, "cell", "embedding")
-    cent_units = _unit_rows(cent_mat)
+    cent_ids, cent_units = _stride_centroids(e)
 
     def top2(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1951,11 +1989,7 @@ def q_simplified_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
             mat = np.array(list(pdf["embedding"]), dtype=np.float64)
             units = _unit_rows(mat)
             sims = np.round(units @ cent_units.T, 6)  # 6dp BEFORE ranking
-            # ties → lowest cell id: lexsort on (-sim, cell)
-            order = np.lexsort(
-                (np.broadcast_to(cent_ids, sims.shape), -sims), axis=1
-            )
-            best, second = order[:, 0], order[:, 1]
+            best, second = _top_cells(sims, cent_ids, 2).T  # ties → lowest cell id
             rows = np.arange(len(ids))
             yield pd.DataFrame(
                 {

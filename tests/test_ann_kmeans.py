@@ -8,7 +8,7 @@ from mi_inbound_pulsar_spark.operators.ann_kmeans import (
     q_ann_kmeans_topk,
     train_spherical_kmeans,
 )
-from mi_inbound_pulsar_spark.operators.similarity import q_cosine_topk
+from mi_inbound_pulsar_spark.operators.similarity import _top_cells, q_cosine_topk
 from mi_inbound_pulsar_spark.sources.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -22,6 +22,37 @@ def test_centroids_unit_norm_and_deterministic(spark):
     np.testing.assert_allclose(np.linalg.norm(c1, axis=1), 1.0, atol=1e-12)
     # Lloyd's with deterministic init + order-independent reduce → same index
     np.testing.assert_allclose(c1, c2, atol=1e-12)
+
+
+def test_kmeans_matches_numpy_lloyd(spark):
+    """The distributed trainer is plain spherical Lloyd's: init on the
+    first k vectors by vec_id, argmax-cosine assignment, each cell the
+    renormalized sum of its members, an empty cell keeps its centroid."""
+    e = load_table(spark, SF_DIR, "embeddings")
+    rows = sorted(e.collect(), key=lambda r: r.vec_id)
+    mat = np.array([r.embedding for r in rows], dtype=np.float64)
+    units = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+    cents = units[:K_CELLS].copy()
+    for _ in range(2):
+        best = np.argmax(units @ cents.T, axis=1)
+        for c in np.unique(best):
+            cents[c] = units[best == c].sum(axis=0)
+        cents /= np.linalg.norm(cents, axis=1, keepdims=True)
+    got = train_spherical_kmeans(e, k=K_CELLS, n_iter=2)
+    np.testing.assert_allclose(got, cents, rtol=0, atol=1e-12)
+
+
+def test_probe_cells_match_per_query_lexsort():
+    """The block-wide cell selection behind ``ivf_probe`` picks, for
+    every query row, exactly the cells of the per-query rule ORDER BY
+    sim DESC, cell — also across exact ties (sims rounded to 1dp) and
+    with cell ids not in column order. No Spark."""
+    rng = np.random.default_rng(11)
+    for _ in range(50):
+        S = np.round(rng.normal(size=(12, 16)), 1)
+        cent_ids = rng.permutation(16).astype(np.int64) * 3 + 1
+        want = np.stack([np.lexsort((cent_ids, -S[i]))[:4] for i in range(len(S))])
+        assert np.array_equal(_top_cells(S, cent_ids, 4), want)
 
 
 def test_kmeans_recall_beats_stride_centroids(spark):

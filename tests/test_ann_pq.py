@@ -85,3 +85,24 @@ def test_ivfpq_recall_gate(spark, sf_dir):
     row = q_ann_ivfpq_recall(spark, sf_dir).collect()[0]
     assert row.recall_ok and row.n_queries == N_QUERIES
 
+
+
+def test_codebooks_match_numpy_lloyd(spark, sf_dir):
+    """The distributed trainer is plain per-subspace L2 Lloyd's: init
+    on the subvectors of the first K_SUB vectors by vec_id, nearest
+    codeword by squared distance, each codeword the mean of its
+    members, an empty codeword keeps its value."""
+    e = load_table(spark, sf_dir, "embeddings")
+    rows = sorted(e.collect(), key=lambda r: r.vec_id)
+    mat = np.array([r.embedding for r in rows], dtype=np.float64)
+    units = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+    dsub = units.shape[1] // M_SUB
+    subs = [units[:, j * dsub : (j + 1) * dsub] for j in range(M_SUB)]
+    books = np.stack([sub[:K_SUB] for sub in subs])
+    for _ in range(2):
+        for j, sub in enumerate(subs):
+            code = np.argmin(((sub[:, None, :] - books[j][None]) ** 2).sum(axis=2), axis=1)
+            for c in np.unique(code):
+                books[j, c] = sub[code == c].mean(axis=0)
+    got = train_pq_codebooks(e, n_iter=2)
+    np.testing.assert_allclose(got, books, rtol=0, atol=1e-12)

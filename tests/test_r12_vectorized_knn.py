@@ -82,3 +82,17 @@ def test_brute_force_topk_empty_queries(spark):
     empty = brute_force_topk(e, e.filter("vec_id > 100"), 3)
     assert empty.collect() == []
     assert empty.schema == brute_force_topk(e, e.filter("vec_id = 0"), 3).schema
+
+
+def test_ivf_flat_topk_empty_queries(spark):
+    """A corpus without query rows (no vec_id < N_QUERIES) gives no
+    result rows, with the same schema as a non-empty call."""
+    from mi_inbound_pulsar_spark.operators.similarity import ivf_flat_topk
+
+    rows = [(i, [float(i), 1.0, 2.0]) for i in range(40)]
+    e = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    cent_ids = np.arange(2, dtype=np.int64)
+    cents = np.array([[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]])
+    empty = ivf_flat_topk(e.filter("vec_id >= 20"), cent_ids, cents)
+    assert empty.collect() == []
+    assert empty.schema == ivf_flat_topk(e, cent_ids, cents).schema
